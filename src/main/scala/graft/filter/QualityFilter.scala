@@ -1,7 +1,7 @@
 package graft.filter
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PiiScrub
@@ -11,10 +11,10 @@ import graft.model.FileRecord
   * + PII/toxicity scrub over a `Dataset[FileRecord]` of source files.
   *
   * Plan shape (one narrow pass end-to-end, no shuffle except the optional
-  * salted repartition):
+  * range repartition on the lineage bucket):
   *
   *   scan parquet
-  *     → repartition(p, repo, pmod(hash(path), SALT))   // skew-breaking
+  *     → repartitionByRange(p, bucket, hash(path))       // skew-breaking
   *     → mapPartitions: langid + KN nll (models broadcast, scored per row)
   *     → Catalyst: heuristics + scrub_pii + keep        // whole-stage codegen
   *     → write kept/verdicts + per-bucket metrics
@@ -23,12 +23,15 @@ import graft.model.FileRecord
   * deserialized once; everything downstream is pure `Column` algebra.
   */
 object QualityFilter {
-  /** Salt width for repo-skew breaking: a mega-repo spreads over up to
-    * this many shuffle partitions (SURVEY.md §4).
-    */
-  val SaltBuckets = 16
   /** Buckets for metrics/lineage + resume granularity. */
   val MetricsBuckets = 64
+
+  /** The lineage bucket of a file: the unit of `partitionBy(bucket)`
+    * writes, per-bucket metrics and resume. The scoring shuffle ranges on
+    * this same expression, so the two must never drift apart.
+    */
+  def bucketOf(repo: Column, path: Column): Column =
+    pmod(hash(repo, path), lit(MetricsBuckets))
 
   final case class Scored(
       repo: String, path: String, commit: String, lang: String,
@@ -64,27 +67,29 @@ object QualityFilter {
   }
 
   /** Score langid + perplexity for every row (single mapPartitions).
-    * `saltBuckets` ≤ 1 disables the skew salt (repo-only repartition) —
-    * ONLY for ScalingBench's skew A/B evidence; production callers keep
-    * the default.
+    * `repartition = false` scores the input's own partitioning.
     */
   def score(spark: SparkSession, input: Dataset[FileRecord],
       langB: Broadcast[LangId.Model], knB: Broadcast[KnLm.Model],
-      repartition: Boolean = true,
-      saltBuckets: Int = SaltBuckets): Dataset[Scored] = {
+      repartition: Boolean = true): Dataset[Scored] = {
     import spark.implicits._
+    // Range-partition on the lineage bucket: each scoring task holds a
+    // contiguous bucket range, so the `partitionBy(bucket)` verdict write
+    // opens one writer per bucket plus one per range boundary (at most
+    // 64 + parts − 1) instead of every task writing every bucket. The bucket hashes
+    // (repo, path), so a mega-repo's rows still spread over all tasks;
+    // the hash(path) tiebreak lets a boundary fall inside a bucket, so
+    // sampled row counts, not the 64 bucket values, set the balance.
     // Explicit partition count: this stage is CPU-bound (regex bank + two
     // model scorers per row), so AQE's byte-based coalescing must NOT fold
-    // it to one task just because the bytes are small — `repartition(cols)`
-    // without a count is coalescible, `repartition(n, cols)` is not.
-    // 2× cores leaves headroom for stragglers from the salt spread.
+    // it to one task just because the bytes are small — a repartition
+    // without a count is coalescible, one with a count is not.
+    // 2× cores leaves headroom for uneven per-row scoring cost.
     val part =
-      if (repartition) {
-        val parts = spark.sparkContext.defaultParallelism * 2
-        if (saltBuckets <= 1) input.repartition(parts, col("repo"))
-        else input.repartition(parts, col("repo"),
-          pmod(hash(col("path")), lit(saltBuckets)))
-      } else input
+      if (repartition)
+        input.repartitionByRange(spark.sparkContext.defaultParallelism * 2,
+          bucketOf(col("repo"), col("path")), hash(col("path")))
+      else input
     part.mapPartitions { it =>
       val lm = langB.value
       val km = knB.value
@@ -106,9 +111,8 @@ object QualityFilter {
     */
   def verdicts(spark: SparkSession, input: Dataset[FileRecord],
       langB: Broadcast[LangId.Model], knB: Broadcast[KnLm.Model],
-      repartition: Boolean = true,
-      saltBuckets: Int = SaltBuckets): DataFrame = {
-    val scored = score(spark, input, langB, knB, repartition, saltBuckets)
+      repartition: Boolean = true): DataFrame = {
+    val scored = score(spark, input, langB, knB, repartition)
     val c = col("content")
     val modelReasons = concat(
       when(col("lang_margin") < LangId.MinMargin, array(lit("lang_uncertain")))
@@ -126,8 +130,7 @@ object QualityFilter {
       .withColumn("pii_types", col("scrub.pii_types"))
       .withColumn("scrubbed_sha256", sha2(col("scrubbed"), 256))
       .withColumn("perplexity", exp(col("avg_nll")))
-      .withColumn("bucket",
-        pmod(hash(col("repo"), col("path")), lit(MetricsBuckets)))
+      .withColumn("bucket", bucketOf(col("repo"), col("path")))
       .drop("scrub")
   }
 

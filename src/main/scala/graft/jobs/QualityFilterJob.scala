@@ -10,14 +10,18 @@ import graft.model.FileRecord
   * with per-partition lineage + metrics").
   *
   * Checkpoint unit = the deterministic content bucket
-  * `pmod(hash(repo,path), 64)`. Protocol (Iceberg-shaped commit semantics
-  * over plain Parquet — SURVEY.md §7.4 risk 4):
+  * `QualityFilter.bucketOf(repo, path)` = `pmod(hash(repo,path), 64)`.
+  * Protocol (Iceberg-shaped commit semantics over plain Parquet —
+  * SURVEY.md §7.4 risk 4):
   *
   *   1. read committed metrics table (if any) → done-bucket set
   *   2. filter input to NOT-done buckets (hash filter pushed into the scan
   *      stage — no shuffle needed to skip completed work)
-  *   3. run the pipeline, write verdicts `partitionBy(bucket)` with
-  *      dynamic partition overwrite (idempotent per bucket on re-run)
+  *   3. run the pipeline, whose scoring shuffle range-partitions on the
+  *      same bucket, so tasks hold contiguous bucket ranges; write
+  *      verdicts `partitionBy(bucket)` with dynamic partition overwrite
+  *      (idempotent per bucket on re-run), one file per (task, bucket) —
+  *      at most 64 + tasks − 1 files
   *   4. ONLY THEN append the buckets' metrics rows — the metrics append is
   *      the commit marker, so a crash between 3 and 4 re-does those
   *      buckets instead of losing them
@@ -61,8 +65,7 @@ object QualityFilterJob {
     val todo =
       if (done.isEmpty) all
       else all.filter(
-        !pmod(hash(col("repo"), col("path")), lit(QualityFilter.MetricsBuckets))
-          .isin(done.toSeq: _*))
+        !QualityFilter.bucketOf(col("repo"), col("path")).isin(done.toSeq: _*))
 
     if (todo.isEmpty) {
       val m = cat.read(spark, "metrics").get

@@ -13,17 +13,13 @@ import graft.model.FileRecord
   *
   * Prereq artifacts (committed): fixtures/golden/labels.jsonl and the model
   * files; regenerate with `sbt "runMain graft.jobs.BuildFixtures"` then
-  * `python3 tools/make_golden.py`.
+  * `python3 tools/make_golden.py`. The corpus itself comes from
+  * [[TinyCorpus]].
   */
 class GoldenParitySpec extends SparkSpec {
-  private def fixturesReady: Boolean =
-    new java.io.File(BuildFixtures.CorpusTinyPath).exists() &&
-      new java.io.File("fixtures/golden/labels.jsonl").exists()
-
   test("keep/drop F1 >= 0.99 and scrubbed sha256 100% match vs golden") {
-    assume(fixturesReady, "fixtures not built; run BuildFixtures + make_golden.py")
     import spark.implicits._
-    val corpus = spark.read.parquet(BuildFixtures.CorpusTinyPath).as[FileRecord]
+    val corpus = spark.read.parquet(TinyCorpus.path).as[FileRecord]
     val lm = spark.sparkContext.broadcast(LangId.load(BuildFixtures.LangIdModelPath))
     val km = spark.sparkContext.broadcast(KnLm.load(BuildFixtures.KnLmModelPath))
     val v = QualityFilter.verdicts(spark, corpus, lm, km)

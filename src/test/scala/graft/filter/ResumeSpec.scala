@@ -14,13 +14,10 @@ import graft.model.FileRecord
   * identical to a clean full run (SURVEY.md §5.2 item 5).
   */
 class ResumeSpec extends SparkSpec {
-  private def fixturesReady = new java.io.File(BuildFixtures.CorpusTinyPath).exists()
-
   test("job resumes from committed buckets; final output matches clean run") {
-    assume(fixturesReady, "run BuildFixtures first")
     import spark.implicits._
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val corpus = BuildFixtures.CorpusTinyPath
+    val corpus = TinyCorpus.path
     val cleanDir = Files.createTempDirectory("graft_clean").toString
     val crashDir = Files.createTempDirectory("graft_crash").toString
 
@@ -38,8 +35,7 @@ class ResumeSpec extends SparkSpec {
     val lm = spark.sparkContext.broadcast(LangId.load(BuildFixtures.LangIdModelPath))
     val km = spark.sparkContext.broadcast(KnLm.load(BuildFixtures.KnLmModelPath))
     val all = spark.read.parquet(corpus).as[FileRecord]
-    val half = all.filter(
-      pmod(hash(col("repo"), col("path")), lit(QualityFilter.MetricsBuckets)) < 32)
+    val half = all.filter(QualityFilter.bucketOf(col("repo"), col("path")) < 32)
     val vHalf = QualityFilter.verdicts(spark, half, lm, km)
     vHalf.write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(s"$crashDir/verdicts")
