@@ -3,9 +3,9 @@ package graft.filter
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Heuristic keep/drop rules as pure Catalyst `Column` expressions (north
-  * rule: "heuristic keep/drop rules (alphanumeric ratio, line-length stats,
-  * duplication ratio) as Catalyst expressions").
+/** Heuristic keep/drop rules (north rule: "heuristic keep/drop rules
+  * (alphanumeric ratio, line-length stats, duplication ratio) as Catalyst
+  * expressions").
   *
   * Threshold *style* follows the reference's fraction gates
   * (`semantic_detector.py:151` ≥0.7, `pii_detector.py:66-71` >0.5); the
@@ -14,9 +14,12 @@ import org.apache.spark.sql.functions._
   * are double divisions of exact integer counts, so the JVM and CPython
   * compute bit-identical values.
   *
-  * Everything here compiles into whole-stage codegen (built-in string/array
-  * functions only — no UDFs), so the scan→filter stage is a single fused
-  * loop over the input partition at any scale.
+  * Two halves: [[textFeatures]] is a plain Scala one-pass walk over the
+  * content string, called row by row inside the scorer `mapPartitions`;
+  * [[dropReasonsFromFeatures]] is the rule set as built-in Catalyst
+  * expressions over those feature columns (no UDFs). Its comparisons are
+  * code-generated; the tag array is assembled by the `filter`/`transform`
+  * higher-order functions, which Spark evaluates interpreted.
   */
 object Heuristics {
   // ---- thresholds (engine contract; mirrored in tools/make_golden.py) ----
@@ -26,64 +29,6 @@ object Heuristics {
   val MinAlnumRatio = 0.25    // drop: binary-ish / low-information blobs
   val DupLineMin = 20         // dup rule applies only at ≥20 non-blank lines
   val MaxDupRatio = 0.7       // drop: >70% duplicated non-blank lines
-
-  /** `split(content, "\n")` with Java semantics keeping trailing empties —
-    * matches Python `str.split("\n")`. Spark's `split` uses limit -1.
-    */
-  def lines(content: Column): Column = split(content, "\n", -1)
-
-  def nChars(content: Column): Column = length(content)
-
-  /** ASCII-alphanumeric char count ([A-Za-z0-9] only — defined contract). */
-  def alnumChars(content: Column): Column =
-    length(regexp_replace(content, "[^A-Za-z0-9]", ""))
-
-  def alnumRatio(content: Column): Column =
-    alnumChars(content).cast("double") /
-      greatest(length(content), lit(1)).cast("double")
-
-  def maxLineLen(content: Column): Column =
-    array_max(transform(lines(content), l => length(l)))
-
-  def avgLineLen(content: Column): Column =
-    length(content).cast("double") / size(lines(content)).cast("double")
-
-  private def nonBlank(content: Column): Column =
-    filter(lines(content), l => trim(l) =!= "")
-
-  def nonBlankLines(content: Column): Column = size(nonBlank(content))
-
-  def distinctNonBlankLines(content: Column): Column =
-    size(array_distinct(nonBlank(content)))
-
-  /** 1 - distinct/total over non-blank lines; 0.0 for all-blank files. */
-  def dupLineRatio(content: Column): Column = {
-    val n = nonBlankLines(content)
-    when(n === 0, lit(0.0)).otherwise(
-      lit(1.0) - distinctNonBlankLines(content).cast("double") / n.cast("double"))
-  }
-
-  /** Array of heuristic drop-reason tags that fired for `content` (empty ⇒
-    * heuristics vote keep). Tag order is fixed and part of the contract.
-    *
-    * NOTE: convenient for ad-hoc use, but it re-walks `content` once per
-    * rule (array HOFs also defeat codegen subexpression elimination —
-    * measured ~0.26 MB/s/core). The production pipeline extracts
-    * [[TextFeatures]] once per row inside the scorer pass and applies
-    * [[dropReasonsFromFeatures]] instead.
-    */
-  def dropReasons(content: Column): Column =
-    reasonsArray(Seq(
-      "empty" -> (trim(content) === ""),
-      "too_small" -> (length(content) < MinChars),
-      "long_line" -> (maxLineLen(content) > MaxLineLen),
-      "avg_line_long" -> (avgLineLen(content) > MaxAvgLineLen),
-      "low_alnum" -> (alnumRatio(content) < MinAlnumRatio),
-      "dup_lines" -> (nonBlankLines(content) >= DupLineMin &&
-        dupLineRatio(content) > MaxDupRatio)))
-
-  /** Heuristic keep (no rule fired). */
-  def heuristicKeep(content: Column): Column = size(dropReasons(content)) === 0
 
   /** Per-row text features, extracted in ONE pass over the content string
     * (fused into the langid/KN-LM `mapPartitions`, so each row is walked

@@ -1,7 +1,5 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
-
 import graft.filter.{KnLm, LangId}
 import graft.fixtures.Corpus
 
@@ -22,14 +20,7 @@ object BuildFixtures {
   val KnLmModelPath = "fixtures/models/knlm.bin"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-build-fixtures")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.cli("graft-build-fixtures", shuffle = "8")
 
     new java.io.File("fixtures/models").mkdirs()
     Corpus.writeCorpus(spark, TinyRows, CorpusTinyPath)

@@ -1,6 +1,5 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.IncrementalDedup
@@ -36,14 +35,7 @@ object CompactBench {
     val perBatch = n / batches
     val deltaN = math.max(500L, perBatch)
     val planted = 20
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.scale()
     import spark.implicits._
 
     val root = java.nio.file.Files

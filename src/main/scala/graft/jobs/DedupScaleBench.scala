@@ -518,14 +518,7 @@ object DedupScaleBench {
       if (args.headOption.contains("cc"))
         Some(args.drop(1).map(_.toLong).toSeq)
       else None
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.scale()
     spark.sparkContext.addSparkListener(Clock)
 
     // "ivfpq <n> [n2 ...]": composed IVF-PQ recall/wall curve

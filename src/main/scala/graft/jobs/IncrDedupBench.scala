@@ -1,6 +1,5 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.{IncrementalDedup, TrainingOps}
@@ -34,14 +33,7 @@ object IncrDedupBench {
     val deltaPct = args.drop(1).headOption.map(_.toInt).getOrElse(1)
     val deltaN = math.max(1000L, n * deltaPct / 100)
     val planted = 50
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.scale()
     import spark.implicits._
 
     val root = java.nio.file.Files

@@ -1,7 +1,5 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Diagnostic: dump formatted physical plans for the query surface so
@@ -12,11 +10,7 @@ object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("local[4]", "4")
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.isEmpty || names.contains(name)) {

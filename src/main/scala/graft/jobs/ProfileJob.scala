@@ -119,15 +119,7 @@ object ProfileJob {
 
   def main(args: Array[String]): Unit = {
     val Array(inputPath, jsonCol, outDir, dict) = args.take(4)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.cli("graft-profile")
     val input = spark.read.parquet(inputPath)
     val (version, hash, profiles) = run(spark, input, jsonCol, outDir, dict)
     println(s"""{"dictionary":"$dict","version":$version,"schema_hash":"$hash","fields":${profiles.count()}}""")

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.filter.{KnLm, LangId, QualityFilter}
@@ -27,23 +27,12 @@ import graft.model.FileRecord
   *      buckets instead of losing them
   *
   * Usage: runMain graft.jobs.QualityFilterJob <inputParquet> <outDir>
-  *        [--kill-after-bucket N]   (test hook: die before commit)
   */
 object QualityFilterJob {
   def main(args: Array[String]): Unit = {
     val input = args(0)
     val outDir = args(1)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-quality-filter")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.cli("graft-quality-filter")
     val result = run(spark, input, outDir)
     println(s"""{"kept":${result._1},"dropped":${result._2},"resumedBuckets":${result._3}}""")
     spark.stop()

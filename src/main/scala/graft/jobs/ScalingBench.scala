@@ -46,27 +46,19 @@ object ScalingBench {
   // the skew signal is the ~32% mega-repo share, which is scale-free).
   val SkewCorpus = "fixtures/data/corpus_skew"
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  private def session(cpus: Int): SparkSession =
+    Sessions.local(s"local[$cpus]", cpus.toString,
+      "spark.app.name" -> s"graft-scaling-$cpus",
+      "spark.sql.session.timeZone" -> "UTC",
       // tmpfs shuffle: on a real cluster shuffle I/O scales with executor
       // local disks; on one box a single shared disk would serialize the
       // exchange and corrupt the N-vs-4N ratio
-      .config("spark.local.dir", "/dev/shm/graft-spark")
+      "spark.local.dir" -> "/dev/shm/graft-spark",
       // at real scale the input is >> cores × 128 MB, so the scan always
       // has enough partitions; the few-hundred-MB bench corpus would
       // otherwise coalesce to ~3 scan partitions and force the spread
       // repartition of raw records into the measured path
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.sql.files.maxPartitionBytes" -> "8m")
 
   /** One full pipeline pass, materialized; returns wall seconds.
     * `repoOnly` runs the naive repo-only repartition instead of the

@@ -188,14 +188,7 @@ object TimeJoinBench {
       case Seq() => Seq(1000000L)
       case s => s
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.scale()
     spark.sparkContext.addSparkListener(DedupScaleBench.Clock)
     val out = ns.map { n =>
       mode match {

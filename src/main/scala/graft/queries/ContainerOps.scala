@@ -174,9 +174,10 @@ object ContainerOps {
     // cache the shingle-ARRAY stage before the explode (the house
     // shingle rule, r7 — it was missing at container granularity): an
     // explode whose child is the uncached interpreted-HOF generator
-    // costs ~15× the array materialization itself (R07Probe at sf0.1:
-    // 7.5 s explode-over-generator vs 0.46 s arrays + cheap explode-
-    // from-cache). Both caches are released by the harness clearCache.
+    // costs ~15× the array materialization itself (sf0.1: 7.5 s
+    // explode-over-generator vs 0.46 s arrays + cheap explode-from-cache;
+    // OPTIMIZATION_r07.md, "q56 / q60"). Both caches are released by the
+    // harness clearCache.
     val sets = graft.profile.Profiler.spread(docs.sparkSession, docs)
       .withColumn("toks", split(trim(col("text")), "\\s+"))
       .filter(size(col("toks")) >= 3)
@@ -210,9 +211,9 @@ object ContainerOps {
       threshold: Double = 0.05, targetMiss: Double = 1e-9,
       dfCap: Int = ContainerDfCap): DataFrame = {
     val (r, b) = TrainingOps.minhashBanding(threshold, targetMiss)
-    TrainingOps.bandedBuckets(
+    TrainingOps.bandedSignature(
       cappedGrams(docs, container, dfCap).withColumnRenamed("cid", "doc_id"),
-      r, b).withColumnRenamed("doc_id", "cid")
+      r, b)._2.withColumnRenamed("doc_id", "cid")
   }
 
   def containerMinhashPairs(docs: DataFrame, container: String = "source",
@@ -221,7 +222,7 @@ object ContainerOps {
       broadcastCandidates: Boolean = true): DataFrame = {
     val (r, b) = TrainingOps.minhashBanding(threshold, targetMiss)
     val grams = cappedGrams(docs, container, dfCap)
-    val buckets = TrainingOps.bandedBuckets(
+    val (_, buckets) = TrainingOps.bandedSignature(
       grams.withColumnRenamed("cid", "doc_id"), r, b)
     // cand/cgrams stay cached across the verify joins; released by the
     // harness clearCache between queries (the shingle-family contract)

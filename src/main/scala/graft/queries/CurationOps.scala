@@ -167,21 +167,6 @@ object CurationOps {
     * boilerplate grams exactly like the dedup index; the gate keeps the
     * uncapped exact semantics the oracle recomputes.
     */
-  /** Distinct (doc_id, gram-hash) rows of `docs` — the shared word-3-gram
-    * generator ([[TrainingOps.shingleSets]] + xxhash64 tokens), with the
-    * shingle-ARRAY stage CACHED before the explode. The house shingle
-    * rule (q15/q16/q43, re-learned here via Q49Probe): an explode over
-    * the uncached generator costs ~10× the array materialization itself
-    * (measured 6.5 s vs 0.6 s at sf0.1, invariant to filter selectivity)
-    * — every consumer must read the cached frame. The cache is released
-    * by the harness clearCache between bench/verify queries (same
-    * contract as minhashBandBuckets). `private[graft]` so probes and
-    * benches can time the stage in isolation.
-    */
-  private[graft] def docGrams(docs: DataFrame): DataFrame =
-    TrainingOps.rawTokens(TrainingOps.shingleSets(
-      docs.select(col("doc_id"), col("text"))).cache())
-
   def decontaminationReport(docs: DataFrame, isEval: Column,
       minOverlap: Int): DataFrame = {
     val flagged = docs.withColumn("is_eval", isEval)
@@ -547,8 +532,9 @@ object CurationOps {
     // cache the window-ARRAY stage before the explode (the house shingle
     // rule, r7 — it was missing here): an explode whose child is the
     // uncached interpreted-HOF generator costs ~15× the array
-    // materialization itself (R07Probe; same pathology the shingle
-    // family documents). Both caches released by the harness clearCache.
+    // materialization itself (OPTIMIZATION_r07.md, "q56 / q60" and
+    // "q57 — repeated spans"; same pathology the shingle family
+    // documents). Both caches released by the harness clearCache.
     val warr = graft.profile.Profiler.spread(docs.sparkSession, docs)
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
       .filter(size(col("toks")) >= k)

@@ -101,27 +101,18 @@ object IncrementalDedup {
     // (transform+array_distinct over every doc) feeds an explode whose
     // uncached plan re-derives the arrays on BOTH sides of the hot-set
     // anti-join — measured 21.7 s vs 2.0 s for the signing stage at
-    // sf0.1 (Q43Probe). One cached token stage then feeds both outputs.
+    // sf0.1 (BENCH.md, "Post-fix re-measurement (round 5, after the
+    // signing-cache fix)"). One cached token stage then feeds both
+    // outputs.
     val sets0 = TrainingOps.shingleSets(docs).cache()
     val tok = TrainingOps.shingleTokensFrozen(sets0, hotFrom(sets0)).cache()
     // r7: ONE groupBy(doc_id) computes the r·b min-signatures AND the
     // stored shingle sets together — they were two separate full-mass
     // aggregations over the cached token frame (the q16 reshape applied
     // to the catalog signing path; values identical)
-    val sigCols = (0 until r * b).map(i =>
-      min(xxhash64(lit(i), col("s"))).as(s"h$i"))
-    val perDoc = tok.groupBy(col("doc_id"))
-      .agg(sigCols.head,
-        (sigCols.tail :+ collect_set(col("s")).as("shingles")): _*)
-      .cache()
-    val bandCols = (0 until b).map { band =>
-      struct(lit(band).as("band"),
-        xxhash64((0 until r).map(row => col(s"h${band * r + row}")): _*)
-          .as("bh"))
-    }
-    val buckets = perDoc
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bh"))
+    val (perDoc, buckets) = TrainingOps.bandedSignature(tok, r, b,
+      Seq(collect_set(col("s")).as("shingles")))
+    perDoc.cache()
     val sets = perDoc.select(col("doc_id"), col("shingles"))
     (buckets, sets,
       () => { sets0.unpersist(); tok.unpersist(); perDoc.unpersist(); () })

@@ -48,8 +48,9 @@ object TrainingOps {
     // transform + array_distinct are INTERPRETED higher-order functions
     // (~25 µs/gram), so a small-but-dense input (one parquet file ≪
     // maxPartitionBytes) would run the whole generator on ONE task —
-    // measured 6.7 s single-task vs ~1 s spread at sf0.1 (Q49Probe). At
-    // real scale the input already has ≥ cores partitions → no-op.
+    // measured 6.7 s single-task vs ~1 s spread at sf0.1 (BENCH.md, "The
+    // q49 single-task incident"). At real scale the input already has
+    // ≥ cores partitions → no-op.
     graft.profile.Profiler.spread(docs.sparkSession, docs)
       .withColumn("toks", split(trim(col("text")), "\\s+"))
       .filter(size(col("toks")) >= 3)
@@ -155,6 +156,54 @@ object TrainingOps {
       .getOrElse((1, maxPerms))
   }
 
+  /** The banded-bucket stage of [[minhashLsh]] alone — (doc_id, band,
+    * band_hash) rows. Diagnostic surface for scale evidence: candidate-
+    * join size can be computed from bucket occupancies (Σ c·(c−1)/2 per
+    * (band, bh)) WITHOUT materialising the join, which is how
+    * DedupScaleBench proves candidates stay linear in N at 10⁶ docs.
+    * Signs through [[bandedSignature]], the same signer as minhashLsh.
+    */
+  def minhashBandBuckets(docs: DataFrame, threshold: Double,
+      targetMiss: Double = 1e-9, dfCap: Int = ShingleDfCap): DataFrame = {
+    val (r, b) = minhashBanding(threshold, targetMiss)
+    // cache the shingle-array stage before tokenizing: the uncached
+    // generator is re-derived on both sides of the hot-df anti-join
+    // (measured 10×; see IncrementalDedup.signatureStages). Callers are
+    // diagnostics/bench (clearCache between points), so no leak.
+    bandedSignature(shingleTokens(shingleSets(docs).cache(), dfCap), r, b)._2
+  }
+
+  /** THE MinHash signer — the one place the signing formula lives: r·b
+    * min-signatures `h_i = min(xxhash64(i, s))` over (doc_id, s) token
+    * rows in ONE groupBy(doc_id), then b bands of r hashed to
+    * `bh = xxhash64(h_{band·r}, …, h_{band·r+r−1})`. Persisted signature
+    * catalogs ([[IncrementalDedup]]) depend on this staying byte-stable
+    * across releases; MinhashSignerSpec pins literal rows.
+    *
+    * `extraAggs` ride in the same groupBy (the verify sets'
+    * `collect_set(s)`), so a caller needing both pays one aggregation.
+    * Returns (perDoc, buckets): perDoc = (doc_id, h0…, extraAggs…),
+    * buckets = (doc_id, band, bh) derived from perDoc. A caller that
+    * reads perDoc twice caches it before the first action; Spark then
+    * substitutes the cached relation into `buckets` as well.
+    */
+  private[queries] def bandedSignature(tok: DataFrame, r: Int, b: Int,
+      extraAggs: Seq[Column] = Nil): (DataFrame, DataFrame) = {
+    val sigCols = (0 until r * b).map(i =>
+      min(xxhash64(lit(i), col("s"))).as(s"h$i"))
+    val perDoc = tok.groupBy(col("doc_id"))
+      .agg(sigCols.head, (sigCols.tail ++ extraAggs): _*)
+    val bandCols = (0 until b).map { band =>
+      struct(lit(band).as("band"),
+        xxhash64((0 until r).map(row => col(s"h${band * r + row}")): _*)
+          .as("bh"))
+    }
+    val buckets = perDoc
+      .select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
+      .select(col("doc_id"), col("bb.band"), col("bb.bh"))
+    (perDoc, buckets)
+  }
+
   /** MinHash + LSH near-dup pairs at `threshold`, verified exact.
     *
     * Pipeline: shingle (DF-capped) → r·b xxhash64 min-signatures (ONE
@@ -170,43 +219,6 @@ object TrainingOps {
     * path — while the exact verify join is proportional to candidates,
     * not pairs; the DF cap bounds hot-shingle fan-out before banding.
     */
-  /** The banded-bucket stage of [[minhashLsh]] alone — (doc_id, band,
-    * band_hash) rows. Diagnostic surface for scale evidence: candidate-
-    * join size can be computed from bucket occupancies (Σ c·(c−1)/2 per
-    * (band, bh)) WITHOUT materialising the join, which is how
-    * DedupScaleBench proves candidates stay linear in N at 10⁶ docs.
-    * Mirrors minhashLsh's signature/banding stages exactly (same
-    * banding, same xxhash64 signature columns).
-    */
-  def minhashBandBuckets(docs: DataFrame, threshold: Double,
-      targetMiss: Double = 1e-9, dfCap: Int = ShingleDfCap): DataFrame = {
-    val (r, b) = minhashBanding(threshold, targetMiss)
-    // cache the shingle-array stage before tokenizing: the uncached
-    // generator is re-derived on both sides of the hot-df anti-join
-    // (measured 10×; see IncrementalDedup.signatureStages). Callers are
-    // diagnostics/bench (clearCache between points), so no leak.
-    bandedBuckets(shingleTokens(shingleSets(docs).cache(), dfCap), r, b)
-  }
-
-  /** Signature + banding stages shared by [[minhashLsh]] and
-    * [[minhashBandBuckets]] — ONE implementation so the diagnostic
-    * surface (whose bucket occupancies DedupScaleBench presents as exact
-    * candidate-join input sizes) cannot drift from the production
-    * pipeline. Input: (doc_id, s) token rows; output: (doc_id, band, bh).
-    */
-  private[queries] def bandedBuckets(tok: DataFrame, r: Int, b: Int): DataFrame = {
-    val sigCols = (0 until r * b).map(i =>
-      min(xxhash64(lit(i), col("s"))).as(s"h$i"))
-    val sigs = tok.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until b).map { band =>
-      struct(lit(band).as("band"),
-        xxhash64((0 until r).map(row => col(s"h${band * r + row}")): _*)
-          .as("bh"))
-    }
-    sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bh"))
-  }
-
   def minhashLsh(spark: SparkSession, docs: DataFrame, threshold: Double,
       targetMiss: Double = 1e-9, dfCap: Int = ShingleDfCap): DataFrame = {
     val (r, b) = minhashBanding(threshold, targetMiss)
@@ -215,21 +227,9 @@ object TrainingOps {
     // verify sets together — they were two separate full-mass
     // aggregations over the cached token frame. Values identical: same
     // tokens, same aggregates.
-    val tok = shingleTokens(sets, dfCap)
-    val sigCols = (0 until r * b).map(i =>
-      min(xxhash64(lit(i), col("s"))).as(s"h$i"))
-    val perDoc = tok.groupBy(col("doc_id"))
-      .agg(sigCols.head,
-        (sigCols.tail :+ collect_set(col("s")).as("shingles")): _*)
-      .cache()
-    val bandCols = (0 until b).map { band =>
-      struct(lit(band).as("band"),
-        xxhash64((0 until r).map(row => col(s"h${band * r + row}")): _*)
-          .as("bh"))
-    }
-    val buckets = perDoc
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bh"))
+    val (perDoc, buckets) = bandedSignature(shingleTokens(sets, dfCap), r, b,
+      Seq(collect_set(col("s")).as("shingles")))
+    perDoc.cache()
     val candidates = buckets.as("a").join(buckets.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -1003,8 +1003,9 @@ object TrainingOps {
   /** Sample-size threshold for the codebook-trainer strategy switch.
     * Both trainers are BIT-IDENTICAL (KmeansParitySpec), so this is
     * purely an execution choice: at ≤ this many samples the driver
-    * thread-pool wins (KmeansProbe: 0.79 s pool vs 5.7 s executor-side
-    * at 708×11,328 — per-iteration Spark job dispatch dominates small
+    * thread-pool wins (0.79 s pool vs 5.7 s executor-side at 708×11,328,
+    * BENCH.md "Round-5 dedup/ANN scale evidence" and "kmeans root-merge
+    * shrink" — per-iteration Spark job dispatch dominates small
     * samples), while above it the sample must not live on the driver at
     * all (ivfParams grows it as 16·√N: ~506k×64 doubles and ~10¹⁰
     * distance ops/iter at 10⁹ vectors) and [[kmeansTrainDist]] keeps

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.filter.{KnLm, LangId, QualityFilter}
-import graft.jobs.BuildFixtures
+import graft.jobs.{BuildFixtures, Sessions}
 import graft.model.FileRecord
 
 /** Incremental quality-filter ingest via Structured Streaming — the
@@ -68,15 +68,7 @@ object StreamingFilterJob {
 
   def main(args: Array[String]): Unit = {
     val Array(inputDir, outDir, checkpointDir) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-streaming-filter")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.cli("graft-streaming-filter")
     val n = runOnce(spark, inputDir, outDir, checkpointDir)
     println(s"""{"rows_processed":$n}""")
     spark.stop()

@@ -1,10 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.jobs.Sessions
 import graft.model.FieldProfile
 import graft.profile.{JsonWalk, Profiler}
 import graft.profile.Profiler.{FieldAccumulator, ProfBuf, RawObs}
@@ -17,7 +19,7 @@ import graft.profile.Profiler.{FieldAccumulator, ProfBuf, RawObs}
   *   readStream (availableNow)
   *     → flatMap JsonWalk observations
   *     → groupByKey(fieldPath).flatMapGroupsWithState(ProfBuf state)
-  *     → foreachBatch: overwrite `current/` snapshot + append `history/`
+  *     → foreachBatch: swap in a new `current/` snapshot + append `history/`
   *
   * The per-key state is exactly the batch engine's [[ProfBuf]] accumulator,
   * folded with the same `FieldAccumulator.reduce` — so a streaming profile
@@ -97,24 +99,33 @@ object StreamingProfileJob {
         if (n > 0) {
           // merge updated paths into the current snapshot (read-modify-write
           // is safe: foreachBatch runs on the driver, one batch at a time)
-          val currentDir = s"$outDir/current"
+          val fs = new Path(outDir)
+            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val (current, next, old) = (new Path(s"$outDir/current"),
+            new Path(s"$outDir/next"), new Path(s"$outDir/old"))
+          def check(ok: Boolean, step: String): Unit =
+            if (!ok) throw new java.io.IOException(
+              s"snapshot swap under $outDir: $step failed")
+          // a swap cut short leaves old/ behind: without current/ it is
+          // still the latest snapshot, beside current/ it is garbage
+          if (fs.exists(old))
+            check(if (fs.exists(current)) fs.delete(old, true)
+              else fs.rename(old, current), "recovering old/")
+          // only an ABSENT snapshot reads as empty; an unreadable one fails
+          // the batch instead of silently restarting the profile
           val prev =
-            try spark.read.parquet(currentDir).as[FieldProfile]
+            if (!fs.exists(current)) spark.emptyDataset[FieldProfile]
+            else spark.read.parquet(current.toString).as[FieldProfile]
               .filter(!col("fieldPath").isin(
                 rows.select("fieldPath").as[String].collect().toSeq: _*))
-            catch { case _: Exception => spark.emptyDataset[FieldProfile] }
           prev.unionByName(rows)
-            .write.mode(SaveMode.Overwrite).parquet(s"$outDir/next")
-          // swap next → current with filesystem ops instead of a second
-          // full read+write job (r7): identical contents, one metadata
-          // rename per batch instead of re-serializing the snapshot. The
-          // read side never sees a half state: this runs on the driver
-          // between batches, same single-writer guarantee as before.
-          val fs = new org.apache.hadoop.fs.Path(currentDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(currentDir), true)
-          fs.rename(new org.apache.hadoop.fs.Path(s"$outDir/next"),
-            new org.apache.hadoop.fs.Path(currentDir))
+            .write.mode(SaveMode.Overwrite).parquet(next.toString)
+          // swap next → current with filesystem renames instead of a
+          // second full read+write job (r7). The old snapshot is moved
+          // aside and deleted only once the new one is in place.
+          if (fs.exists(current)) check(fs.rename(current, old), "current/ → old/")
+          check(fs.rename(next, current), "next/ → current/")
+          if (fs.exists(old)) check(fs.delete(old, true), "deleting old/")
           rows.withColumn("batch_id", lit(batchId))
             .write.mode(SaveMode.Append).parquet(s"$outDir/history")
         }
@@ -205,15 +216,7 @@ object StreamingProfileJob {
 
   def main(args: Array[String]): Unit = {
     val Array(inputDir, outDir, checkpointDir) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-streaming-profile")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.cli("graft-streaming-profile")
     val n = runOnce(spark, inputDir, outDir, checkpointDir)
     println(s"""{"profiles_updated":$n}""")
     spark.stop()

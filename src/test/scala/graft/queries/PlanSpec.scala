@@ -126,7 +126,8 @@ class PlanSpec extends SparkSpec {
   test("q43 signing reads the token stage from cache, not the raw generator") {
     // regression pin for the r5 10× fix: the shingle generator must be
     // cached before the explode/anti-join consume it — an uncached plan
-    // re-derives the arrays on both sides (Q43Probe: 21.7 s vs 2.0 s)
+    // re-derives the arrays on both sides (21.7 s vs 2.0 s, BENCH.md
+    // "Post-fix re-measurement (round 5, after the signing-cache fix)")
     import org.apache.spark.sql.functions.col
     val (b, _) = IncrementalDedup.signatures(
       Queries.t(spark, dir, "documents").filter(col("doc_id") >= 0), 0.9)

@@ -64,4 +64,45 @@ class StreamingProfileSpec extends SparkSpec {
     val history = spark.read.parquet(s"$out/history")
     assert(history.count() == 5L)
   }
+
+  test("an unreadable current/ snapshot fails the next batch loudly") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_sprof_bad").toString
+    val in = s"$base/in"; val out = s"$base/out"; val ck = s"$base/ck"
+    Seq("""{"a": 1}""").toDF("doc").coalesce(1)
+      .write.mode("append").parquet(in)
+    assert(StreamingProfileJob.runOnce(spark, in, out, ck) == 1L)
+
+    // corrupt every data file of the committed snapshot
+    val current = new java.io.File(s"$out/current")
+    current.listFiles().foreach { f =>
+      if (f.getName.endsWith(".crc")) f.delete()
+      else if (f.getName.endsWith(".parquet"))
+        Files.write(f.toPath, "not a parquet file".getBytes("UTF-8"))
+    }
+    Seq("""{"b": 2}""").toDF("doc").coalesce(1)
+      .write.mode("append").parquet(in)
+    intercept[Exception](StreamingProfileJob.runOnce(spark, in, out, ck))
+    // the unreadable snapshot was neither replaced nor deleted
+    assert(current.listFiles().exists(_.getName.endsWith(".parquet")))
+  }
+
+  test("a swap cut short after moving current/ aside keeps the old snapshot") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_sprof_cut").toString
+    val in = s"$base/in"; val out = s"$base/out"; val ck = s"$base/ck"
+    Seq("""{"a": 1}""").toDF("doc").coalesce(1)
+      .write.mode("append").parquet(in)
+    StreamingProfileJob.runOnce(spark, in, out, ck)
+    // the crash window: current/ renamed to old/, next/ not yet in place
+    Files.move(java.nio.file.Paths.get(s"$out/current"),
+      java.nio.file.Paths.get(s"$out/old"))
+    Seq("""{"b": 2}""").toDF("doc").coalesce(1)
+      .write.mode("append").parquet(in)
+    assert(StreamingProfileJob.runOnce(spark, in, out, ck) == 1L)
+    val paths = spark.read.parquet(s"$out/current").as[FieldProfile]
+      .collect().map(_.fieldPath).toSet
+    assert(paths == Set("a", "b"))
+    assert(!new java.io.File(s"$out/old").exists())
+  }
 }
