@@ -84,23 +84,10 @@ object CatalogAdmin {
     */
   def clear(spark: SparkSession, outDir: String): Map[String, Long] = {
     val cat = new ParquetCatalog(outDir)
-    def rmTree(p: Path): Unit =
-      if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(Files.delete(_))
-        finally s.close()
-      }
     Tables.map { t =>
       val n = cat.read(spark, t).map(_.count()).getOrElse(0L)
-      rmTree(Paths.get(cat.path(t)))
-      // Also drop rename-swap remnants: a `__rewrite` left by a crash
-      // mid-parquet-write (live still authoritative, so it was never
-      // promoted) would otherwise be resurrected by ParquetCatalog.read's
-      // recovery path after this clear — live is gone, so the stale
-      // partial rewrite would look like a completed swap.
-      rmTree(Paths.get(s"${cat.path(t)}__rewrite"))
-      rmTree(Paths.get(s"${cat.path(t)}__old"))
+      // with its replace siblings, which the next read would promote
+      cat.drop(spark, t)
       t -> n
     }.toMap
   }

@@ -1,7 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -126,42 +125,21 @@ object Dictionaries {
     def dropPartition(table: String): Long = {
       val n = cat.read(spark, table)
         .map(_.filter(col("dictionary") === dict).count()).getOrElse(0L)
-      val dir = Paths.get(cat.path(table), s"dictionary=$dict")
-      if (Files.exists(dir)) {
-        val s = Files.walk(dir)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(Files.delete(_))
-        finally s.close()
-      }
+      val dir = new java.io.File(cat.path(table), s"dictionary=$dict")
+      if (!FileUtil.fullyDelete(dir))
+        throw new java.io.IOException(s"could not delete $dir")
       n
     }
 
-    // Crash-consistent marker rewrite: the live directory is swapped by
-    // RENAME, never deleted while it is the only copy. Sequence: write the
-    // rewrite to `__rewrite`, rename live → `__old`, rename `__rewrite` →
-    // live, delete `__old`. A crash in any window leaves either the old
-    // table readable or a complete `__rewrite` that ParquetCatalog.read
-    // recovers — the versions/dictionaries tables can never vanish.
+    // the small marker tables are rewritten without the dictionary's
+    // rows by the catalog's atomic replace: never deleted while live
     def rewriteMarker(table: String): Long = cat.read(spark, table) match {
       case None => 0L
       case Some(df) =>
         val keep = df.filter(col("dictionary") =!= dict).cache()
         val removed = df.count() - keep.count()
-        val tmp = Paths.get(s"${cat.path(table)}__rewrite")
-        val old = Paths.get(s"${cat.path(table)}__old")
-        def rmTree(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-          val s = Files.walk(p)
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .forEach(Files.delete(_))
-          finally s.close()
-        }
-        rmTree(tmp); rmTree(old) // stale remnants from a prior crash
-        keep.write.mode("overwrite").parquet(tmp.toString)
+        cat.replace(keep, table)
         keep.unpersist()
-        val live = Paths.get(cat.path(table))
-        Files.move(live, old)
-        Files.move(tmp, live)
-        rmTree(old)
         removed
     }
 

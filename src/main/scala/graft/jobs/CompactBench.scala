@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.functions._
 
 import graft.queries.IncrementalDedup
@@ -84,15 +85,7 @@ object CompactBench {
           f""""compact_sec":$compactSec%.2f,""" +
           f""""delta_compacted_sec":$wallComp%.2f,""" +
           f""""planted_found_frag":$found1,"planted_found_comp":$found2}""")
-    } finally {
-      val p = java.nio.file.Paths.get(root)
-      if (java.nio.file.Files.exists(p)) {
-        val s = java.nio.file.Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally s.close()
-      }
-    }
+    } finally FileUtil.fullyDelete(new java.io.File(root))
     spark.stop()
   }
 }

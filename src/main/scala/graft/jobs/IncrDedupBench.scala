@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.functions._
 
 import graft.queries.{IncrementalDedup, TrainingOps}
@@ -97,15 +98,7 @@ object IncrDedupBench {
           f""""delta_bcast_sec":$bcastSec%.2f,"delta_shuffle_sec":$shufSec%.2f,""" +
           f""""full_recompute_sec":$fullSec%.2f,""" +
           f""""speedup":${fullSec / incrSec}%.2f}""")
-    } finally {
-      val p = java.nio.file.Paths.get(root)
-      if (java.nio.file.Files.exists(p)) {
-        val s = java.nio.file.Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally s.close()
-      }
-    }
+    } finally FileUtil.fullyDelete(new java.io.File(root))
     spark.stop()
   }
 }

@@ -1,7 +1,10 @@
 package graft.queries
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.catalog.ParquetCatalog
 
 /** Incremental MinHash near-dup dedup (r4 verdict item 6): the 100 TB
   * operational shape is "new docs vs existing corpus", not full
@@ -189,7 +192,7 @@ object IncrementalDedup {
       catalogDir: String, threshold: Double,
       dfCap: Int = TrainingOps.ShingleDfCap): (String, String) = {
     val spark = batchDocs.sparkSession
-    recover(spark, catalogDir) // roll forward an interrupted compaction
+    rollForward(spark, catalogDir) // finish an interrupted compaction
     val hDir = hotPath(catalogDir)
     val (hfs, hp) = fs(spark, s"$hDir/_SUCCESS")
     val (newB, newS, release) = signatureStages(batchDocs, threshold,
@@ -242,16 +245,18 @@ object IncrementalDedup {
   // ---- catalog lifecycle: compaction + cap-set rebuild (r5 verdict
   // item 5). One parquet dir per crawl batch is the right write shape
   // (idempotent replay, no read-modify-write), but after 10⁴ crawls the
-  // bucket read degrades into a small-files scan; `compact` rewrites
-  // batches [0..upTo] into ONE batch dir under a crash-safe marker
-  // protocol (write tmp → write marker → swap → drop marker; every
-  // reader first rolls an interrupted swap forward via [[recover]]).
+  // bucket read degrades into a small-files scan; `compact` folds
+  // batches [0..upTo] into ONE batch dir by replacing `buckets` and
+  // `sets` whole through the catalog's atomic [[ParquetCatalog.replace]]
+  // (every commit first rolls an interrupted replace forward).
 
-  private def markerPath(catalogDir: String) = s"$catalogDir/COMPACT"
-  private def tmpPath(catalogDir: String) = s"$catalogDir/compact_tmp"
+  private def rollForward(spark: SparkSession, catalogDir: String): Unit = {
+    val cat = new ParquetCatalog(catalogDir)
+    Seq("buckets", "sets").foreach(cat.rollForward(spark, _))
+  }
 
   /** Batch ids currently present under `$catalogDir/$sub`. */
-  private[queries] def batchIds(spark: SparkSession, catalogDir: String,
+  private[graft] def batchIds(spark: SparkSession, catalogDir: String,
       sub: String): Seq[Long] = {
     val (f, p) = fs(spark, s"$catalogDir/$sub")
     if (!f.exists(p)) Seq.empty
@@ -264,7 +269,7 @@ object IncrementalDedup {
     * the single dir `batch=upTo` (buckets and sets alike), so the
     * steady-state layout is one big seed dir plus the recent crawl tail.
     * Pairs output is INVARIANT: compaction permutes file layout, never
-    * rows (IncrementalDedupSpec pins set equality through a compaction).
+    * rows (CatalogCompactionSpec pins set equality through a compaction).
     *
     * Contract: `upTo` must be ≤ the last checkpoint-COMMITTED batch id —
     * compacting a batch that a crashed stream may still replay would let
@@ -272,84 +277,21 @@ object IncrementalDedup {
     * the compacted dir. (The streaming checkpoint, not this catalog, is
     * the source of truth for what is committed.)
     *
-    * Crash safety: data lands under `compact_tmp/` first; the marker
-    * file names `upTo` and is written only after both tmp writes
-    * complete; the swap (delete old batch dirs, rename tmp into place,
-    * drop marker) is idempotent and rolled forward by [[recover]] from
-    * any interruption point. A crash BEFORE the marker leaves the
-    * catalog untouched (stale tmp is overwritten by the next compact).
+    * Crash safety: each sub-table is one [[ParquetCatalog.replace]], and
+    * a sub-table already folded is skipped, so re-running a compaction
+    * cut short finishes it. Range partitioning on (batch, doc_id) keeps
+    * each batch's file count proportional to its size.
     */
   def compact(spark: SparkSession, catalogDir: String, upTo: Long): Unit = {
-    recover(spark, catalogDir) // roll forward any interrupted swap first
-    if (batchIds(spark, catalogDir, "buckets")
-        .count(_ <= upTo) <= 1) return // nothing to fold
-    writeCompactTmp(spark, catalogDir, upTo)
-    writeMarker(spark, catalogDir, upTo)
-    finishCompaction(spark, catalogDir, upTo)
-  }
-
-  /** Phase 1 of [[compact]]: materialize the folded batches under
-    * `compact_tmp/` (catalog untouched; a crash here is a no-op).
-    */
-  private[queries] def writeCompactTmp(spark: SparkSession,
-      catalogDir: String, upTo: Long): Unit = {
-    val ids = batchIds(spark, catalogDir, "buckets").filter(_ <= upTo)
+    rollForward(spark, catalogDir)
+    val cat = new ParquetCatalog(catalogDir)
     val par = spark.sparkContext.defaultParallelism
-    def readBatches(sub: String): DataFrame =
-      ids.map(i => spark.read.parquet(s"$catalogDir/$sub/batch=$i"))
-        .reduce(_ unionByName _)
-    readBatches("buckets").repartition(par)
-      .write.mode("overwrite").parquet(s"${tmpPath(catalogDir)}/buckets")
-    readBatches("sets").repartition(par)
-      .write.mode("overwrite").parquet(s"${tmpPath(catalogDir)}/sets")
-  }
-
-  /** Phase 2 of [[compact]]: the commit point — once the marker exists,
-    * every reader rolls the swap forward.
-    */
-  private[queries] def writeMarker(spark: SparkSession, catalogDir: String,
-      upTo: Long): Unit = {
-    val (f, mp) = fs(spark, markerPath(catalogDir))
-    val out = f.create(mp, true)
-    try out.write(s"$upTo\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** The swap half of [[compact]] — idempotent, so [[recover]] can rerun
-    * it from any crash point once the marker exists.
-    */
-  private[queries] def finishCompaction(spark: SparkSession,
-      catalogDir: String, upTo: Long): Unit = {
-    val (f, _) = fs(spark, catalogDir)
-    for (sub <- Seq("buckets", "sets")) {
-      for (i <- batchIds(spark, catalogDir, sub); if i <= upTo)
-        f.delete(new org.apache.hadoop.fs.Path(
-          s"$catalogDir/$sub/batch=$i"), true)
-      val tmp = new org.apache.hadoop.fs.Path(s"${tmpPath(catalogDir)}/$sub")
-      if (f.exists(tmp)) {
-        val dstParent = new org.apache.hadoop.fs.Path(s"$catalogDir/$sub")
-        if (!f.exists(dstParent)) f.mkdirs(dstParent)
-        f.rename(tmp,
-          new org.apache.hadoop.fs.Path(s"$catalogDir/$sub/batch=$upTo"))
-      }
-    }
-    f.delete(new org.apache.hadoop.fs.Path(tmpPath(catalogDir)), true)
-    f.delete(new org.apache.hadoop.fs.Path(markerPath(catalogDir)), false)
-    ()
-  }
-
-  /** Roll an interrupted compaction swap forward (no-op without a
-    * marker). [[deltaStep]] and [[commitBatch]] run this before touching
-    * the catalog, so a reader never sees the half-swapped layout.
-    */
-  def recover(spark: SparkSession, catalogDir: String): Unit = {
-    val (f, mp) = fs(spark, markerPath(catalogDir))
-    if (f.exists(mp)) {
-      val in = f.open(mp)
-      val upTo =
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      finishCompaction(spark, catalogDir, upTo)
+    for (sub <- Seq("buckets", "sets")
+        if batchIds(spark, catalogDir, sub).count(_ <= upTo) > 1) {
+      val folded = cat.read(spark, sub).get.withColumn("batch",
+        when(col("batch") <= upTo, lit(upTo)).otherwise(col("batch")))
+      cat.replace(folded.repartitionByRange(par, col("batch"), col("doc_id")),
+        sub, Seq("batch"))
     }
   }
 
@@ -397,18 +339,7 @@ object IncrementalDedup {
         val pairs = deltaStep(spark, delta, 1L, root, 0.9)
           .orderBy(col("doc_i"), col("doc_j"))
         (pairs.collect().toSeq, pairs.schema)
-      } finally deleteRecursively(java.nio.file.Paths.get(root))
+      } finally FileUtil.fullyDelete(new java.io.File(root))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
-    ()
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -121,18 +122,7 @@ object StreamingDedupJob {
         val projected = allPairs(spark, out)
           .orderBy(col("doc_i"), col("doc_j"))
         (projected.collect().toSeq, projected.schema)
-      } finally deleteRecursively(java.nio.file.Paths.get(root))
+      } finally FileUtil.fullyDelete(new java.io.File(root))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
-    ()
   }
 }

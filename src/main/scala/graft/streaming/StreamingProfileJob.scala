@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.catalog.ParquetCatalog
 import graft.jobs.Sessions
 import graft.model.FieldProfile
 import graft.profile.{JsonWalk, Profiler}
@@ -19,7 +20,7 @@ import graft.profile.Profiler.{FieldAccumulator, ProfBuf, RawObs}
   *   readStream (availableNow)
   *     → flatMap JsonWalk observations
   *     → groupByKey(fieldPath).flatMapGroupsWithState(ProfBuf state)
-  *     → foreachBatch: swap in a new `current/` snapshot + append `history/`
+  *     → foreachBatch: replace the `current` snapshot, write `history/`
   *
   * The per-key state is exactly the batch engine's [[ProfBuf]] accumulator,
   * folded with the same `FieldAccumulator.reduce` — so a streaming profile
@@ -27,6 +28,11 @@ import graft.profile.Profiler.{FieldAccumulator, ProfBuf, RawObs}
   * (asserted in StreamingProfileSpec). State lives in the checkpoint's
   * state store: a restarted query (new process, same checkpoint) resumes
   * counting where it left off and only reads NEW files.
+  *
+  * Both outputs survive a replayed batch (foreachBatch is at-least-once):
+  * `current` goes through [[ParquetCatalog.replace]], so a crash leaves
+  * the old or the new snapshot and the merge re-applies identically;
+  * `history/` is overwritten per `batch_id` partition, never appended.
   *
   * Arrival keys across batches: the batch engine's global order key is
   * (recordId, seq), but per-batch record ids restart at 0 — so the state
@@ -99,35 +105,19 @@ object StreamingProfileJob {
         if (n > 0) {
           // merge updated paths into the current snapshot (read-modify-write
           // is safe: foreachBatch runs on the driver, one batch at a time)
-          val fs = new Path(outDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val (current, next, old) = (new Path(s"$outDir/current"),
-            new Path(s"$outDir/next"), new Path(s"$outDir/old"))
-          def check(ok: Boolean, step: String): Unit =
-            if (!ok) throw new java.io.IOException(
-              s"snapshot swap under $outDir: $step failed")
-          // a swap cut short leaves old/ behind: without current/ it is
-          // still the latest snapshot, beside current/ it is garbage
-          if (fs.exists(old))
-            check(if (fs.exists(current)) fs.delete(old, true)
-              else fs.rename(old, current), "recovering old/")
+          val cat = new ParquetCatalog(outDir)
           // only an ABSENT snapshot reads as empty; an unreadable one fails
           // the batch instead of silently restarting the profile
-          val prev =
-            if (!fs.exists(current)) spark.emptyDataset[FieldProfile]
-            else spark.read.parquet(current.toString).as[FieldProfile]
+          val prev = cat.read(spark, "current") match {
+            case None => spark.emptyDataset[FieldProfile]
+            case Some(df) => df.as[FieldProfile]
               .filter(!col("fieldPath").isin(
                 rows.select("fieldPath").as[String].collect().toSeq: _*))
-          prev.unionByName(rows)
-            .write.mode(SaveMode.Overwrite).parquet(next.toString)
-          // swap next → current with filesystem renames instead of a
-          // second full read+write job (r7). The old snapshot is moved
-          // aside and deleted only once the new one is in place.
-          if (fs.exists(current)) check(fs.rename(current, old), "current/ → old/")
-          check(fs.rename(next, current), "next/ → current/")
-          if (fs.exists(old)) check(fs.delete(old, true), "deleting old/")
-          rows.withColumn("batch_id", lit(batchId))
-            .write.mode(SaveMode.Append).parquet(s"$outDir/history")
+          }
+          cat.replace(prev.unionByName(rows).toDF(), "current")
+          // keyed by batch id: a replayed batch rewrites its own rows
+          cat.overwritePartitions(rows.withColumn("batch_id", lit(batchId)),
+            "history", Seq("batch_id"))
         }
         rows.unpersist()
         ()
@@ -198,20 +188,9 @@ object StreamingProfileJob {
     // can be deleted before returning.
     val rows = projected.collect().toSeq
     val schema = projected.schema
-    deleteRecursively(java.nio.file.Paths.get(root))
+    FileUtil.fullyDelete(new java.io.File(root))
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
-    ()
   }
 
   def main(args: Array[String]): Unit = {

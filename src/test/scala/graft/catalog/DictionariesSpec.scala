@@ -128,4 +128,27 @@ class DictionariesSpec extends SparkSpec {
       .map(_.getString(0)).toSeq === Seq("items"))
     assert(!Files.exists(java.nio.file.Paths.get(s"${cat.path("versions")}__rewrite")))
   }
+
+  test("a write during a pending delete swap rolls the swap forward first") {
+    val outDir = Files.createTempDirectory("graft_dicts6").toString
+    seed(outDir)
+    Dictionaries.updateMeta(spark, outDir, "users",
+      Some("Users"), None, ts("2024-01-01 00:00:00"))
+    Dictionaries.updateMeta(spark, outDir, "items",
+      Some("Items"), None, ts("2024-01-01 00:00:00"))
+    // delete("users") cut between "live → __old" and "__rewrite → live"
+    val cat = new ParquetCatalog(outDir)
+    val meta = cat.path("dictionary_meta")
+    cat.read(spark, "dictionary_meta").get
+      .filter(org.apache.spark.sql.functions.col("dictionary") =!= "users")
+      .write.parquet(s"${meta}__rewrite")
+    Files.move(java.nio.file.Paths.get(meta),
+      java.nio.file.Paths.get(s"${meta}__old"))
+    // a later metadata update must land on the rewritten table
+    Dictionaries.updateMeta(spark, outDir, "users",
+      Some("Users again"), None, ts("2024-02-01 00:00:00"))
+    val latest = Dictionaries.latestMeta(spark, outDir).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(latest === Map("items" -> "Items", "users" -> "Users again"))
+  }
 }

@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.Row
 
 import graft.SparkSpec
@@ -7,11 +9,11 @@ import graft.SparkSpec
 /** Signature-catalog lifecycle (r5 verdict item 5): one parquet dir per
   * crawl batch is the right write shape, but after 10⁴ crawls the bucket
   * read becomes a small-files scan — [[IncrementalDedup.compact]] folds
-  * batches [0..upTo] into one dir under a crash-safe marker protocol.
+  * batches [0..upTo] into one dir through the catalog's atomic replace.
   * Pins: (1) delta pairs are INVARIANT under compaction (layout change,
-  * never a row change); (2) an interrupted swap — crash right after the
-  * marker commit point — rolls forward idempotently on the next catalog
-  * touch; (3) [[IncrementalDedup.rebuild]] is the runnable cap-set
+  * never a row change); (2) an interrupted swap — crash once the
+  * compacted rewrite is complete — rolls forward idempotently on the
+  * next catalog touch; (3) [[IncrementalDedup.rebuild]] is the runnable cap-set
   * refresh (fresh hot set, batch history dropped).
   */
 class CatalogCompactionSpec extends SparkSpec {
@@ -44,6 +46,12 @@ class CatalogCompactionSpec extends SparkSpec {
     import spark.implicits._
     pairSet(IncrementalDedup.deltaStep(
       spark, deltaB.toDF("doc_id", "text"), 2L, root, 0.9).collect())
+  }
+
+  private def copyTree(src: Path, dst: Path): Unit = {
+    val s = Files.walk(src)
+    try s.forEach(q => Files.copy(q, dst.resolve(src.relativize(q))))
+    finally s.close()
   }
 
   private def withTemp(f: String => Unit): Unit = {
@@ -85,32 +93,42 @@ class CatalogCompactionSpec extends SparkSpec {
       seed(root)
       reference = runDelta(root)
     }
+    // the crash window of a compaction's replace: the compacted tables
+    // are complete in `__rewrite` (taken from a twin catalog compacted
+    // without interruption), the live tables were moved to `__old`, and
+    // the `__rewrite` → live renames never ran
+    def crashState(root: String): Unit = withTemp { twin =>
+      seed(twin)
+      IncrementalDedup.compact(spark, twin, upTo = 1L)
+      for (sub <- Seq("buckets", "sets")) {
+        Files.move(Paths.get(s"$root/$sub"), Paths.get(s"$root/${sub}__old"))
+        copyTree(Paths.get(s"$twin/$sub"), Paths.get(s"$root/${sub}__rewrite"))
+      }
+    }
+    def remnants(root: String): Seq[String] =
+      for (sub <- Seq("buckets", "sets"); sfx <- Seq("__old", "__rewrite")
+        if Files.exists(Paths.get(s"$root/$sub$sfx"))) yield s"$sub$sfx"
     withTemp { root =>
       seed(root)
-      // simulate the crash window: tmp written, marker committed, swap
-      // never ran — the state every reader must be able to roll forward
-      IncrementalDedup.writeCompactTmp(spark, root, 1L)
-      IncrementalDedup.writeMarker(spark, root, 1L)
-      // recover is idempotent: run it twice explicitly, then let
-      // deltaStep's implicit recovery find nothing left to do
-      IncrementalDedup.recover(spark, root)
-      IncrementalDedup.recover(spark, root)
+      crashState(root)
+      // the roll-forward is idempotent: run it twice explicitly, then let
+      // deltaStep's implicit roll-forward find nothing left to do
+      val cat = new graft.catalog.ParquetCatalog(root)
+      for (_ <- 1 to 2; sub <- Seq("buckets", "sets"))
+        cat.rollForward(spark, sub)
       assert(IncrementalDedup.batchIds(spark, root, "buckets") === Seq(1L))
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/COMPACT")))
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/compact_tmp")))
+      assert(remnants(root) === Nil)
       assert(runDelta(root) === reference)
     }
     withTemp { root =>
       seed(root)
       // same crash window, but the roll-forward happens IMPLICITLY via
-      // the next deltaStep (no explicit recover call)
-      IncrementalDedup.writeCompactTmp(spark, root, 1L)
-      IncrementalDedup.writeMarker(spark, root, 1L)
+      // the next deltaStep (no explicit roll-forward call)
+      crashState(root)
       assert(runDelta(root) === reference)
       assert(IncrementalDedup.batchIds(spark, root, "buckets") ===
         Seq(1L, 2L))
+      assert(remnants(root) === Nil)
     }
   }
 

@@ -94,15 +94,37 @@ class StreamingProfileSpec extends SparkSpec {
     Seq("""{"a": 1}""").toDF("doc").coalesce(1)
       .write.mode("append").parquet(in)
     StreamingProfileJob.runOnce(spark, in, out, ck)
-    // the crash window: current/ renamed to old/, next/ not yet in place
+    // the crash window: current/ renamed to current__old, no rewrite yet
     Files.move(java.nio.file.Paths.get(s"$out/current"),
-      java.nio.file.Paths.get(s"$out/old"))
+      java.nio.file.Paths.get(s"$out/current__old"))
     Seq("""{"b": 2}""").toDF("doc").coalesce(1)
       .write.mode("append").parquet(in)
     assert(StreamingProfileJob.runOnce(spark, in, out, ck) == 1L)
     val paths = spark.read.parquet(s"$out/current").as[FieldProfile]
       .collect().map(_.fieldPath).toSet
     assert(paths == Set("a", "b"))
-    assert(!new java.io.File(s"$out/old").exists())
+    assert(!new java.io.File(s"$out/current__old").exists())
+  }
+
+  test("a batch replayed after a crash before its commit leaves history and current as they were") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_sprof_replay").toString
+    val in = s"$base/in"; val out = s"$base/out"; val ck = s"$base/ck"
+    Seq("""{"a": 1, "b": "x"}""", """{"a": 2}""").toDF("doc").coalesce(1)
+      .write.mode("append").parquet(in)
+    StreamingProfileJob.runOnce(spark, in, out, ck)
+    Seq("""{"a": null, "c": true}""", """{"b": "y", "c": false}""")
+      .toDF("doc").coalesce(1).write.mode("append").parquet(in)
+    StreamingProfileJob.runOnce(spark, in, out, ck)
+    def current = spark.read.parquet(s"$out/current").as[FieldProfile]
+      .collect().toSet
+    val before = current
+    assert(spark.read.parquet(s"$out/history").count() == 5L)
+    // the crash window: batch 1's outputs written, its commit not
+    Files.delete(java.nio.file.Paths.get(s"$ck/commits/1"))
+    Files.deleteIfExists(java.nio.file.Paths.get(s"$ck/commits/.1.crc"))
+    assert(StreamingProfileJob.runOnce(spark, in, out, ck) == 3L)
+    assert(spark.read.parquet(s"$out/history").count() == 5L)
+    assert(current == before)
   }
 }
