@@ -22,15 +22,31 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   */
 object VecMath {
 
-  /** Σ a(i)·b(i) over the common prefix, ascending index order (the
-    * exact fold order of aggregate(zip_with(a, b, _*_), 0.0, _+_)).
+  /** Σ a(i)·b(i), ascending index order (the exact fold order of
+    * aggregate(zip_with(a, b, _*_), 0.0, _+_)). Defined only where
+    * [[defined]] holds; [[VecDotExpr]] checks that first.
     */
   def dot(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
     var s = 0.0
     var i = 0
     while (i < n) { s += a.getDouble(i) * b.getDouble(i); i += 1 }
     s
+  }
+
+  /** Whether the legacy fold yields a number: zip_with pads the shorter
+    * array with nulls, and one null product makes the whole sum null, so
+    * a length mismatch or any null element gives null.
+    */
+  def defined(a: ArrayData, b: ArrayData): Boolean = {
+    val n = a.numElements()
+    if (n != b.numElements()) return false
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return false
+      i += 1
+    }
+    true
   }
 
   /** Column API: vec_dot(a, b) over two array&lt;double&gt; columns. */
@@ -39,20 +55,29 @@ object VecMath {
 }
 
 /** Catalyst expression wrapping [[VecMath.dot]]; stays inside whole-stage
-  * codegen via a static call (the ScrubPiiExpr pattern).
+  * codegen via a static call (the ScrubPiiExpr pattern). Null where
+  * [[VecMath.defined]] fails, in both the interpreted and codegen paths,
+  * as the legacy fold is.
   */
 case class VecDotExpr(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "vec_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecMath.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (VecMath.defined(x, y)) VecMath.dot(x, y) else null
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.VecMath.dot($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""if (graft.functions.VecMath.defined($a, $b)) {
+         |  ${ev.value} = graft.functions.VecMath.dot($a, $b);
+         |} else {
+         |  ${ev.isNull} = true;
+         |}""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): VecDotExpr =

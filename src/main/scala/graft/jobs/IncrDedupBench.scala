@@ -58,14 +58,13 @@ object IncrDedupBench {
 
       // the delta's signing commit, shared by both join-path timings
       val t1 = System.nanoTime()
-      val (bDir, _) = IncrementalDedup.commitBatch(
-        delta, 1L, s"$root/catalog", 0.9)
+      val committed = IncrementalDedup.commitCounted(delta, 1L,
+        s"$root/catalog", 0.9, TrainingOps.ShingleDfCap)
       val signDeltaSec = (System.nanoTime() - t1) / 1e9
 
-      val allB = spark.read.parquet(s"$root/catalog/buckets")
-      val allS = spark.read.parquet(s"$root/catalog/sets")
-      val newB = spark.read.parquet(bDir)
-      val deltaBucketRows = newB.count()
+      // deltaStep's own snapshot read and write-observed row count
+      val (newB, allB, allS) = committed.read(spark)
+      val deltaBucketRows = committed.bucketRows
 
       def planted50(df: org.apache.spark.sql.DataFrame): Long = df
         .filter(col("doc_j") === col("doc_i") + 100000000L &&

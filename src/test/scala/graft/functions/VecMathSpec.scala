@@ -8,10 +8,11 @@ import graft.SparkSpec
   * the optimization replaced the interpreted zip_with+aggregate chain in
   * [[graft.queries.TrainingOps.cosineCol]], so this spec proves (1) BIT
   * identity against that exact legacy expression — same IEEE fold order,
-  * not merely approximate equality — (2) null propagation, and (3) that
-  * the expression runs inside whole-stage codegen (the point of the
-  * change; an interpreted fallback would silently reintroduce the q28
-  * per-pair cost).
+  * not merely approximate equality — (2) null propagation, including
+  * the legacy fold's null on a length mismatch or a null element, and
+  * (3) that the expression runs inside whole-stage codegen (the point of
+  * the change; an interpreted fallback would silently reintroduce the
+  * q28 per-pair cost).
   */
 class VecMathSpec extends SparkSpec {
 
@@ -63,6 +64,50 @@ class VecMathSpec extends SparkSpec {
       .toDF("a", "b")
     val r = df.select(VecMath.vec_dot(col("a"), col("b"))).head()
     assert(r.isNullAt(0))
+  }
+
+  test("length mismatch or a null element gives null, like the legacy fold, in codegen and interpreted paths") {
+    // spark.range source so the projection really runs (no constant
+    // folding): (a, b, expected) per id
+    val cases = Seq(
+      ("array(1.0D, 2.0D, 3.0D)", "array(1.0D, 2.0D)", None),
+      ("array(1.0D)", "array(1.0D, 2.0D)", None),
+      ("array(1.0D, CAST(NULL AS DOUBLE))", "array(1.0D, 2.0D)", None),
+      ("array(1.0D, 2.0D)", "array(CAST(NULL AS DOUBLE), 2.0D)", None),
+      ("array(1.0D, 2.0D)", "array(3.0D, 4.0D)", Some(11.0)),
+      ("CAST(array() AS array<double>)", "CAST(array() AS array<double>)",
+        Some(0.0)))
+    def pick(side: Seq[String]) = expr(side.zipWithIndex
+      .map { case (e, i) => s"WHEN $i THEN $e" }
+      .mkString("CASE id ", " ", " END"))
+    val ab = spark.range(cases.size).select(col("id"),
+      pick(cases.map(_._1)).as("a"), pick(cases.map(_._2)).as("b"))
+    // two frames: the legacy HOFs would pull a shared projection out of
+    // whole-stage codegen
+    val fast = ab.select(col("id"), VecMath.vec_dot(col("a"), col("b")).as("d"))
+    val slow = ab.select(col("id"), legacyDot(col("a"), col("b")).as("d"))
+    def run(df: org.apache.spark.sql.DataFrame): Seq[Option[Double]] =
+      df.orderBy("id").collect().toSeq
+        .map(r => Option(r.getAs[java.lang.Double]("d")).map(_.doubleValue))
+    val expected = cases.map(_._3)
+
+    assert(run(slow) === expected)
+    assert(run(fast) === expected)
+    val fastLine = fast.queryExecution.executedPlan.toString.linesIterator
+      .find(_.contains("vec_dot")).getOrElse(fail("vec_dot not in plan"))
+    assert(fastLine.contains("*("), s"not codegen'd: $fastLine")
+
+    val keys = Seq("spark.sql.codegen.wholeStage",
+      "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      assert(run(fast) === expected)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("vec_dot runs inside whole-stage codegen") {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 
@@ -82,6 +83,87 @@ class IncrementalDedupSpec extends SparkSpec {
         broadcastMaxRows = 1L).collect())
       assert(got.map(p => (p._1, p._2)) === Set((2000L, 3000L), (5L, 3001L)))
     } finally deleteTree(root)
+  }
+
+  test("deltaStep keeps the corpus's doc_id type and equals an inferred read of its catalog") {
+    import spark.implicits._
+    for (asInt <- Seq(true, false)) {
+      def docs(rows: Seq[(Long, String)]) = {
+        val df = rows.toDF("doc_id", "text")
+        if (asInt) df.withColumn("doc_id", col("doc_id").cast("int")) else df
+      }
+      val root = java.nio.file.Files.createTempDirectory("graft_incr_ty").toString
+      try {
+        IncrementalDedup.commitBatch(docs(corpusA), 0L, root, 0.9)
+        val step = IncrementalDedup.deltaStep(spark, docs(corpusB), 1L, root,
+          0.9)
+        val got = step.collect().toSet
+        // the reference: the same catalog read back with inferred schemas
+        val inferred = IncrementalDedup.deltaPairs(
+          spark.read.parquet(s"$root/buckets/batch=1"),
+          spark.read.parquet(s"$root/buckets"),
+          spark.read.parquet(s"$root/sets"), 0.9)
+        val want = if (asInt) "int" else "bigint"
+        assert(step.schema === inferred.schema)
+        assert(step.schema("doc_i").dataType.simpleString === want)
+        assert(step.schema("doc_j").dataType.simpleString === want)
+        assert(got === inferred.collect().toSet)
+        assert(got.map(r => (r.get(0).toString, r.get(1).toString)) ===
+          Set(("2000", "3000"), ("5", "3001")))
+      } finally deleteTree(root)
+    }
+  }
+
+  test("a catalog with batch 0 and a batch id past Int.MaxValue returns its planted pairs") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_incr_big").toString
+    try {
+      IncrementalDedup.commitBatch(
+        corpusA.toDF("doc_id", "text"), 0L, root, 0.9)
+      val big = Int.MaxValue + 7L
+      val got = pairSet(IncrementalDedup.deltaStep(spark,
+        corpusB.toDF("doc_id", "text"), big, root, 0.9).collect())
+      assert(got.map(p => (p._1, p._2)) === Set((2000L, 3000L), (5L, 3001L)))
+      assert(spark.read.parquet(s"$root/buckets").schema("batch").dataType
+        .simpleString === "bigint")
+    } finally deleteTree(root)
+  }
+
+  test("one deltaStep on a seeded catalog runs 14 Spark jobs, on every run") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // the catalog's schema and the batch's row count come from the commit
+    // itself: no parquet footer inference (four jobs) and no count over
+    // the written dir (two jobs), which made this step 20 jobs
+    def jobsOfOneStep(run: Int): Int = {
+      val root = java.nio.file.Files.createTempDirectory("graft_incr_jobs").toString
+      val group = s"incr-dedup-jobs-$run"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties)
+              .exists(_.getProperty("spark.jobGroup.id") == group))
+            jobs.incrementAndGet()
+      }
+      try {
+        IncrementalDedup.commitBatch(
+          corpusA.toDF("doc_id", "text"), 0L, root, 0.9)
+        sc.addSparkListener(listener)
+        sc.setJobGroup(group, "one deltaStep")
+        val pairs = try IncrementalDedup.deltaStep(spark,
+            corpusB.toDF("doc_id", "text"), 1L, root, 0.9).collect()
+          finally sc.clearJobGroup()
+        assert(pairSet(pairs).map(p => (p._1, p._2)) ===
+          Set((2000L, 3000L), (5L, 3001L)))
+        org.apache.spark.ListenerDrain(sc)
+        jobs.get
+      } finally {
+        sc.removeSparkListener(listener)
+        deleteTree(root)
+      }
+    }
+    assert(Seq(1, 2).map(jobsOfOneStep) === Seq(14, 14))
   }
 
   test("frozen cap set: a shingle hot in the corpus but not the delta signs identically") {
