@@ -35,15 +35,11 @@ object Exports {
 
   private[graft] val pyTitleUdf = udf(pyTitle _)
 
-  /** Deterministic fallback business name + description
-    * (`ai_generator.py:525-533`): the engine's network-free stand-in for
-    * the reference's AI annotation path. Implemented as the J3 annotation
-    * join against an empty annotation set, so annotated and unannotated
-    * exports share one code path.
+  /** The J3 annotation join; fields without an annotation (or every field,
+    * with `None`) get the deterministic fallback business name +
+    * description (`ai_generator.py:525-533`), the engine's network-free
+    * stand-in for the reference's AI annotation path.
     */
-  def withFallbackAnnotation(profiles: DataFrame): DataFrame =
-    annotated(profiles, None)
-
   private def annotated(profiles: DataFrame,
       anns: Option[DataFrame]): DataFrame = {
     import graft.catalog.Annotations

@@ -56,7 +56,10 @@ object Patterns {
   // ---- scrubber bank (in-text, de-anchored; north rule) ----
   // Order matters and is part of the contract: each pattern is applied as a
   // full sequential pass over the output of the previous one, identically in
-  // the Scala engine and the Python oracle (tools/make_golden.py).
+  // the Scala engine and the Python oracle (tools/make_golden.py). The
+  // engine skips a pass whose gate (ScrubRule.gate, a necessary condition
+  // for a match, checked on the current string) is false; that changes no
+  // output byte.
   // Lookarounds use explicit ASCII classes so Java and Python agree byte-for-
   // byte on every match span (see note on \b above).
 
@@ -89,15 +92,150 @@ object Patterns {
   val ScrubToxic: String =
     "(?i)(?<![a-zA-Z])(?:" + ToxicWords.mkString("|") + ")(?![a-zA-Z])"
 
-  /** (pattern, replacement, requiresLuhn) in application order. */
-  val ScrubBank: Seq[(String, String, Boolean)] = Seq(
-    (ScrubEmail, "<EMAIL>", false),
-    (ScrubAwsKey, "<AWS_KEY>", false),
-    (ScrubSsn, "<SSN>", false),
-    (ScrubCreditCard, "<CREDIT_CARD>", true),
-    (ScrubPhone, "<PHONE>", false),
-    (ScrubToxic, "<TOXIC>", false)
+  /** One scrub pass: `regex` is replaced by `replacement` (a credit-card
+    * candidate only when its digits are Luhn-valid), and `name` joins the
+    * row's `pii_types` when at least one replacement happened.
+    *
+    * `gate` is a necessary condition for a match: whenever
+    * `Pattern.compile(regex).matcher(s).find()` holds, `gate(s)` holds (it
+    * tests the pattern's core with its lookarounds ignored). The scrubber
+    * evaluates it on the current string — the output of the earlier passes,
+    * since a replacement can create or remove a later pattern's candidate —
+    * and skips the regex pass when it is false. A skipped pass cannot
+    * match, so the output is byte-identical to running every pass.
+    * Gates are allocation-free scans.
+    */
+  final case class ScrubRule(name: String, regex: String, replacement: String,
+      luhn: Boolean, gate: String => Boolean)
+
+  /** The scrub passes in application order; each gate sits beside the
+    * pattern it must cover.
+    */
+  val ScrubBank: Seq[ScrubRule] = Seq(
+    ScrubRule("email", ScrubEmail, "<EMAIL>", luhn = false,
+      _.indexOf('@') >= 0),
+    ScrubRule("aws_key", ScrubAwsKey, "<AWS_KEY>", luhn = false,
+      _.indexOf("AKIA") >= 0),
+    ScrubRule("ssn", ScrubSsn, "<SSN>", luhn = false, hasSsnShape),
+    ScrubRule("credit_card", ScrubCreditCard, "<CREDIT_CARD>", luhn = true,
+      hasCardCore),
+    ScrubRule("phone", ScrubPhone, "<PHONE>", luhn = false, hasPhoneTail),
+    ScrubRule("toxic", ScrubToxic, "<TOXIC>", luhn = false, hasToxicWord)
   )
+
+  // ---- scrub gates (see ScrubRule) ----
+
+  @inline private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+  /** `s(from until from + n)` lies inside `s` and is all ASCII digits. */
+  private def digitsAt(s: String, from: Int, n: Int): Boolean = {
+    if (from < 0 || from + n > s.length) return false
+    var k = from
+    while (k < from + n) {
+      if (!isDigit(s.charAt(k))) return false
+      k += 1
+    }
+    true
+  }
+
+  /** `s` contains `[0-9]{4}[ -]?[0-9]{4}[ -]?[0-9]{4}[ -]?[0-9]{4}`: the
+    * card pattern's core without its same-separator backreference. After
+    * four digits a `' '` or `'-'` can only be the optional separator, so
+    * the scan from each start is deterministic.
+    */
+  private def hasCardCore(s: String): Boolean = {
+    var i = 0
+    while (i + 16 <= s.length) {
+      var pos = i
+      var groups = 0
+      while (groups < 4 && digitsAt(s, pos, 4)) {
+        pos += 4
+        groups += 1
+        if (pos < s.length && (s.charAt(pos) == ' ' || s.charAt(pos) == '-')) pos += 1
+      }
+      if (groups == 4) return true
+      i += 1
+    }
+    false
+  }
+
+  /** `s` contains `[0-9]{3}-[0-9]{2}-[0-9]{4}`: the SSN pattern's core. */
+  private def hasSsnShape(s: String): Boolean = {
+    var i = s.indexOf('-', 3)
+    while (i >= 0) {
+      if (digitsAt(s, i - 3, 3) && digitsAt(s, i + 1, 2) &&
+          i + 3 < s.length && s.charAt(i + 3) == '-' && digitsAt(s, i + 4, 4))
+        return true
+      i = s.indexOf('-', i + 1)
+    }
+    false
+  }
+
+  /** `s` contains `[0-9]{3}[-. ][0-9]{4}`, the tail that both alternatives
+    * of the phone pattern end with.
+    */
+  private def hasPhoneTail(s: String): Boolean = {
+    var run = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (isDigit(c)) run += 1
+      else {
+        if (run >= 3 && (c == '-' || c == '.' || c == ' ') && digitsAt(s, i + 1, 4))
+          return true
+        run = 0
+      }
+      i += 1
+    }
+    false
+  }
+
+  private val toxicLower: Array[String] = {
+    require(ToxicWords.forall(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')),
+      "toxic words must be lowercase ASCII for the fold in hasToxicWord")
+    ToxicWords.toArray
+  }
+
+  /** `toxicFirst(c)`: some toxic word starts with the lowercase letter `c`. */
+  private val toxicFirst: Array[Boolean] = {
+    val t = new Array[Boolean](128)
+    toxicLower.foreach(w => t(w.charAt(0)) = true)
+    t
+  }
+
+  /** `s` contains a toxic word under ASCII case folding — the folding that
+    * `(?i)` applies without UNICODE_CASE, so non-ASCII look-alikes (`ſ`,
+    * the Kelvin sign) match neither the gate nor the pattern.
+    */
+  private def hasToxicWord(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i) | 0x20
+      if (c < 128 && toxicFirst(c)) {
+        var w = 0
+        while (w < toxicLower.length) {
+          if (foldedAt(s, i, toxicLower(w))) return true
+          w += 1
+        }
+      }
+      i += 1
+    }
+    false
+  }
+
+  /** `s` holds `lower` at `at`, ASCII letters compared case-insensitively
+    * (`c | 0x20` maps exactly 'A'-'Z' onto 'a'-'z' among the chars that
+    * can equal a lowercase letter).
+    */
+  private def foldedAt(s: String, at: Int, lower: String): Boolean = {
+    if (at + lower.length > s.length) return false
+    var j = 0
+    while (j < lower.length) {
+      if ((s.charAt(at + j) | 0x20) != lower.charAt(j)) return false
+      j += 1
+    }
+    true
+  }
 
   /** Luhn checksum over a digit string — `pii_detector.py:83-96`. */
   def luhnValid(digits: String): Boolean = {

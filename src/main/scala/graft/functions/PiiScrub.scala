@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.util.regex.{Matcher, Pattern}
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,15 +11,23 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass(-per-pattern) PII/toxicity scrubber (north rule; SURVEY.md
-  * §2.9 U1).
+/** Sequential gated PII/toxicity scrubber (north rule; SURVEY.md §2.9 U1).
   *
   * The pattern bank mirrors the reference's class-level compiled regexes
   * (`semantic_detector.py:20-41`, `pii_detector.py:16-19`) — compiled ONCE
   * per JVM in this object's static init, exactly like the reference compiles
-  * them once per class. Patterns are applied in the fixed order of
-  * [[Patterns.ScrubBank]]; the credit-card pattern additionally requires a
-  * Luhn-valid digit string (`pii_detector.py:75-96`) before replacing.
+  * them once per class. The six patterns of [[Patterns.ScrubBank]] run as
+  * sequential passes in its fixed order, each over the output of the one
+  * before; the credit-card pattern additionally requires a Luhn-valid digit
+  * string (`pii_detector.py:75-96`) before replacing.
+  *
+  * Gate contract: before a pass, its rule's `gate` — a cheap necessary
+  * condition for a match of that pattern — is evaluated on the current
+  * string, and a false gate skips the regex pass. Since a pass whose gate is
+  * false cannot match, the scrubbed bytes and `pii_types` are identical to
+  * running every pass; the gate only saves the regex's attempt at every
+  * character offset (and the email pattern's backtracking) on rows that
+  * cannot match.
   *
   * Byte-identity contract: the Python golden oracle (tools/make_golden.py)
   * applies the same bank with `re.sub` in the same order; all patterns use
@@ -27,13 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * match spans (no `\b`, no `\d`-vs-Unicode divergence).
   */
 object PiiScrub {
-  /** (compiled pattern, replacement, requiresLuhn, piiTypeName) */
-  val bank: Array[(Pattern, String, Boolean, String)] = {
-    val names = Array("email", "aws_key", "ssn", "credit_card", "phone", "toxic")
-    Patterns.ScrubBank.zip(names).map { case ((re, repl, luhn), name) =>
-      (Pattern.compile(re), repl, luhn, name)
-    }.toArray
-  }
+  private val bank: Array[(Patterns.ScrubRule, Pattern)] =
+    Patterns.ScrubBank.map(r => (r, Pattern.compile(r.regex))).toArray
 
   /** Scrub `s`; returns (scrubbed, distinct pii types found in bank order). */
   def scrubWithTypes(s: String): (String, Array[String]) = {
@@ -41,30 +44,48 @@ object PiiScrub {
     val found = new scala.collection.mutable.ArrayBuffer[String](4)
     var i = 0
     while (i < bank.length) {
-      val (p, repl, luhn, name) = bank(i)
-      val m = p.matcher(cur)
-      if (m.find()) {
-        val sb = new java.lang.StringBuilder(cur.length)
-        var hit = false
-        var last = 0
-        do {
-          val ok = !luhn || Patterns.luhnValid(
-            cur.substring(m.start, m.end).replaceAll("[\\s-]", ""))
-          if (ok) {
-            sb.append(cur, last, m.start).append(repl)
-            last = m.end
-            hit = true
+      val (rule, p) = bank(i)
+      if (rule.gate(cur)) {
+        val m = p.matcher(cur)
+        if (m.find()) {
+          val sb = new java.lang.StringBuilder(cur.length)
+          var hit = false
+          var last = 0
+          do {
+            val ok = !rule.luhn ||
+              Patterns.luhnValid(stripSpaceDash(cur, m.start, m.end))
+            if (ok) {
+              sb.append(cur, last, m.start).append(rule.replacement)
+              last = m.end
+              hit = true
+            }
+          } while (m.find())
+          sb.append(cur, last, cur.length)
+          if (hit) {
+            cur = sb.toString
+            found += rule.name
           }
-        } while (m.find())
-        sb.append(cur, last, cur.length)
-        if (hit) {
-          cur = sb.toString
-          found += name
         }
       }
       i += 1
     }
     (cur, found.toArray)
+  }
+
+  /** `s.substring(from, to).replaceAll("[\\s-]", "")` without compiling a
+    * pattern per call: drops `-` and Java's `\s` set `[ \t\n\x0B\f\r]`.
+    */
+  private def stripSpaceDash(s: String, from: Int, to: Int): String = {
+    val sb = new java.lang.StringBuilder(to - from)
+    var k = from
+    while (k < to) {
+      val c = s.charAt(k)
+      if (!(c == '-' || c == ' ' || c == '\t' || c == '\n' || c == '\u000B' ||
+          c == '\f' || c == '\r'))
+        sb.append(c)
+      k += 1
+    }
+    sb.toString
   }
 
   /** Codegen entry point: UTF8String in → InternalRow(scrubbed, types[]). */

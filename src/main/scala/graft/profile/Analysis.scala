@@ -16,14 +16,6 @@ object Analysis {
     profiles.groupBy(col("dataType")).agg(count(lit(1)).as("n_fields"))
       .orderBy(col("dataType"))
 
-  /** A4 — semantic-type distribution (undetected excluded, as the
-    * reference skips None keys).
-    */
-  def semanticDistribution(profiles: Dataset[FieldProfile]): DataFrame =
-    profiles.filter(col("semanticType").isNotNull)
-      .groupBy(col("semanticType")).agg(count(lit(1)).as("n_fields"))
-      .orderBy(col("semanticType"))
-
   /** A4/A6 — whole-catalog statistics: field count, PII count, average
     * null %, nullable/array counts (`analysis_service.py:670-715`).
     */

@@ -51,6 +51,17 @@ class FilterLayoutSpec extends SparkSpec {
     assert(spread >= 8, s"mega-repo scored in only $spread partitions")
   }
 
+  test("verdicts run the scrubber once per row: one scrub_pii( in the plan") {
+    import spark.implicits._
+    val (lm, km) = models()
+    val input = spark.read.parquet(TinyCorpus.path).as[FileRecord]
+    val v = QualityFilter.verdicts(spark, input, lm, km)
+    v.write.format("noop").mode("overwrite").save()
+    val plan = v.queryExecution.executedPlan.toString
+    val calls = "scrub_pii\\(".r.findAllMatchIn(plan).size
+    assert(calls == 1, s"scrub_pii( appears $calls times in:\n$plan")
+  }
+
   test("a resumed run over the missing buckets keeps the file bound") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_layout_resume").toString
