@@ -3,7 +3,8 @@ package graft.catalog
 import java.io.IOException
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, SaveMode,
+  SparkSession}
 
 /** The engine's one table catalog (SURVEY.md §1.4/§7.1): Parquet tables
   * under `baseDir`, with the two Iceberg-shaped commit protocols every
@@ -26,6 +27,20 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `newOverwrite()` the rename swap). Paths go through the Hadoop
   * `FileSystem` of `baseDir`. Rename is atomic on HDFS and local disks,
   * not on object stores.
+  *
+  * Write-helper contract: every engine path write starts at
+  * [[ParquetCatalog.writer]] — this class's writes, the dedup signature
+  * catalog, the streaming sinks, the CSV export and the bench corpora.
+  * The helper routes `file:` paths to [[NioLocalFileSystem]], which sets
+  * permissions in process instead of forking `chmod` per file and
+  * directory. The two Hadoop options ride on each write, not on the
+  * session: Spark copies write options into the job's Hadoop conf on the
+  * driver and the executors, so they hold in any session (including one
+  * built outside `Sessions`) and are not masked by a `file:` FileSystem
+  * the session already cached; other schemes are untouched. The class
+  * falls back to the stock method when native IO is loaded, the mode
+  * needs more than the rwx bits or the target is a setuid/setgid
+  * directory, so permissions stay exactly Hadoop's.
   */
 final class ParquetCatalog(baseDir: String) {
 
@@ -69,7 +84,7 @@ final class ParquetCatalog(baseDir: String) {
   def overwritePartitions(df: DataFrame, table: String,
       partitionCols: Seq[String]): Unit = {
     rollForward(df.sparkSession, table)
-    df.write.mode(SaveMode.Overwrite)
+    ParquetCatalog.writer(df).mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path(table))
@@ -79,7 +94,7 @@ final class ParquetCatalog(baseDir: String) {
   def appendPartitions(df: DataFrame, table: String,
       partitionCols: Seq[String]): Unit = {
     rollForward(df.sparkSession, table)
-    df.write.mode(SaveMode.Append)
+    ParquetCatalog.writer(df).mode(SaveMode.Append)
       .partitionBy(partitionCols: _*)
       .parquet(path(table))
   }
@@ -87,7 +102,7 @@ final class ParquetCatalog(baseDir: String) {
   /** Append commit-marker rows — call ONLY after the data landed. */
   def appendMarker(df: DataFrame, table: String): Unit = {
     rollForward(df.sparkSession, table)
-    df.write.mode(SaveMode.Append).parquet(path(table))
+    ParquetCatalog.writer(df).mode(SaveMode.Append).parquet(path(table))
   }
 
   /** Atomically replace the whole table with `df`, which may read the
@@ -105,7 +120,7 @@ final class ParquetCatalog(baseDir: String) {
     remove(f, old, table, "deleting a stale __old")
     // ErrorIfExists, not Overwrite: a dynamic partitionOverwriteMode in
     // the session would commit through a staging dir without _SUCCESS
-    df.write.mode(SaveMode.ErrorIfExists)
+    ParquetCatalog.writer(df).mode(SaveMode.ErrorIfExists)
       .partitionBy(partitionCols: _*)
       .parquet(rewrite.toString)
     if (f.exists(live)) check(f.rename(live, old), table, "live → __old")
@@ -129,4 +144,18 @@ final class ParquetCatalog(baseDir: String) {
       Some(spark.read.parquet(path(table)))
     else None
   }
+}
+
+object ParquetCatalog {
+
+  /** Hadoop options for a `file:` write through [[NioLocalFileSystem]];
+    * `disable.cache` keeps that class scoped to the write's own conf.
+    */
+  private[catalog] val LocalWriteOptions = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** The start of every engine path write (see the class docstring). */
+  def writer[T](ds: Dataset[T]): DataFrameWriter[T] =
+    ds.write.options(LocalWriteOptions)
 }

@@ -3,6 +3,7 @@ package graft.export
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.ParquetCatalog
 import graft.model.FieldProfile
 
 /** Export surface — the reference's presentation operators (SURVEY.md
@@ -95,9 +96,8 @@ object Exports {
     * stand-in for the styled XLSX writer; POI is not in this sandbox).
     */
   def exportCsv(profiles: Dataset[FieldProfile], path: String): Unit =
-    dataDictionarySheet(profiles)
-      .coalesce(1)
-      .write.mode("overwrite").option("header", "true").csv(path)
+    ParquetCatalog.writer(dataDictionarySheet(profiles).coalesce(1))
+      .mode("overwrite").option("header", "true").csv(path)
 
   /** One collected, styled "Data Dictionary" sheet — shared by the single
     * export (E1) and the batch export (E5). Styling precedence mirrors

@@ -119,7 +119,7 @@ object Patterns {
     ScrubRule("ssn", ScrubSsn, "<SSN>", luhn = false, hasSsnShape),
     ScrubRule("credit_card", ScrubCreditCard, "<CREDIT_CARD>", luhn = true,
       hasCardCore),
-    ScrubRule("phone", ScrubPhone, "<PHONE>", luhn = false, hasPhoneTail),
+    ScrubRule("phone", ScrubPhone, "<PHONE>", luhn = false, hasPhoneCore),
     ScrubRule("toxic", ScrubToxic, "<TOXIC>", luhn = false, hasToxicWord)
   )
 
@@ -171,24 +171,35 @@ object Patterns {
     false
   }
 
-  /** `s` contains `[0-9]{3}[-. ][0-9]{4}`, the tail that both alternatives
-    * of the phone pattern end with.
+  @inline private def isPhoneSep(c: Char): Boolean =
+    c == '-' || c == '.' || c == ' '
+
+  /** `s` contains `(\([0-9]{3}\)[-. ]?|[0-9]{3}[-. ])[0-9]{3}[-. ][0-9]{4}`:
+    * the phone pattern's core without its optional `+1` prefix. Each
+    * offset `i` is tried as the start of the `[0-9]{3}[-. ][0-9]{4}` tail,
+    * which at least 4 chars of area code must precede.
     */
-  private def hasPhoneTail(s: String): Boolean = {
-    var run = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (isDigit(c)) run += 1
-      else {
-        if (run >= 3 && (c == '-' || c == '.' || c == ' ') && digitsAt(s, i + 1, 4))
-          return true
-        run = 0
-      }
+  private def hasPhoneCore(s: String): Boolean = {
+    var i = 4
+    while (i + 8 <= s.length) {
+      if (digitsAt(s, i, 3) && isPhoneSep(s.charAt(i + 3)) &&
+          digitsAt(s, i + 4, 4) && phoneAreaEndsAt(s, i))
+        return true
       i += 1
     }
     false
   }
+
+  /** `s(0 until end)` ends with `\([0-9]{3}\)[-. ]?` or `[0-9]{3}[-. ]`. */
+  private def phoneAreaEndsAt(s: String, end: Int): Boolean =
+    if (isPhoneSep(s.charAt(end - 1)))
+      digitsAt(s, end - 4, 3) || parenAreaEndsAt(s, end - 1)
+    else parenAreaEndsAt(s, end)
+
+  /** `s(0 until end)` ends with `\([0-9]{3}\)`. */
+  private def parenAreaEndsAt(s: String, end: Int): Boolean =
+    end >= 5 && s.charAt(end - 1) == ')' && digitsAt(s, end - 4, 3) &&
+      s.charAt(end - 5) == '('
 
   private val toxicLower: Array[String] = {
     require(ToxicWords.forall(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')),

@@ -6,6 +6,7 @@ import java.util.concurrent.Executors
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
+import graft.catalog.ParquetCatalog
 import graft.filter.{KnLm, LangId, QualityFilter}
 import graft.fixtures.Corpus
 import graft.model.FileRecord
@@ -93,7 +94,7 @@ object ScalingBench {
     */
   private def writeProfileCorpus(spark: SparkSession, rows: Long): Unit = {
     import org.apache.spark.sql.functions._
-    spark.range(rows).select(
+    val docs = spark.range(rows).select(
       to_json(struct(
         col("id"),
         concat(lit("user "), col("id")).as("name"),
@@ -108,8 +109,8 @@ object ScalingBench {
           .as("profile"),
         array(col("id") % 3, col("id") % 5).as("tags")),
         Map("ignoreNullFields" -> "false")).as("doc"))
-      .repartition(64)
-      .write.mode("overwrite").parquet(ProfileCorpus)
+    ParquetCatalog.writer(docs.repartition(64)).mode("overwrite")
+      .parquet(ProfileCorpus)
   }
 
   /** One full profiling-engine pass (S1-S3/P1-P7/A1/W3 — the reference's

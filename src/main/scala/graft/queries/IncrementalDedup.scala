@@ -244,16 +244,16 @@ object IncrementalDedup {
           // computed FROM THE CACHED shingle stage (one generator
           // derivation total), persisted BEFORE signing so a replay that
           // crashed mid-commit re-signs against the identical set
-          hot.write.mode("overwrite").parquet(hDir)
+          ParquetCatalog.writer(hot).mode("overwrite").parquet(hDir)
         }
         spark.read.schema(hot.schema).parquet(hDir)
       })
     val bDir = s"$catalogDir/buckets/batch=$batchId"
     val sDir = s"$catalogDir/sets/batch=$batchId"
     val rows = Observation()
-    newB.observe(rows, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(bDir)
-    newS.write.mode("overwrite").parquet(sDir)
+    ParquetCatalog.writer(newB.observe(rows, count(lit(1)).as("n")))
+      .mode("overwrite").parquet(bDir)
+    ParquetCatalog.writer(newS).mode("overwrite").parquet(sDir)
     release()
     Committed(catalogDir, bDir, sDir, newB.schema, newS.schema,
       rows.get("n").asInstanceOf[Long])

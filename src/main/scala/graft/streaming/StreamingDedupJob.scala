@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
+import graft.catalog.ParquetCatalog
 import graft.queries.IncrementalDedup
 
 /** Incremental near-dup dedup on the availableNow streaming path (r4
@@ -76,7 +77,7 @@ object StreamingDedupJob {
             IncrementalDedup.deltaStep(spark, batch, batchId,
               catalogDir, threshold)
           }
-        pairs.write.mode("overwrite")
+        ParquetCatalog.writer(pairs).mode("overwrite")
           .parquet(s"$outDir/pairs/batch=$batchId")
         batches.add(1)
         ()
@@ -115,9 +116,11 @@ object StreamingDedupJob {
           (s"$root/in", s"$root/cat", s"$root/out", s"$root/ckpt")
         val docs = graft.queries.Queries.t(spark, dir, "documents")
           .select(col("doc_id"), col("text"))
-        docs.filter(col("doc_id") % 10 =!= 0).write.mode("append").parquet(in)
+        ParquetCatalog.writer(docs.filter(col("doc_id") % 10 =!= 0))
+          .mode("append").parquet(in)
         runOnce(spark, in, cat, out, ckpt, 0.9)
-        docs.filter(col("doc_id") % 10 === 0).write.mode("append").parquet(in)
+        ParquetCatalog.writer(docs.filter(col("doc_id") % 10 === 0))
+          .mode("append").parquet(in)
         runOnce(spark, in, cat, out, ckpt, 0.9)
         val projected = allPairs(spark, out)
           .orderBy(col("doc_i"), col("doc_j"))

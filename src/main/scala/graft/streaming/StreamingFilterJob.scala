@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.catalog.ParquetCatalog
 import graft.filter.{KnLm, LangId, QualityFilter}
 import graft.jobs.{BuildFixtures, Sessions}
 import graft.model.FileRecord
@@ -51,11 +52,11 @@ object StreamingFilterJob {
         val n = v.count()
         processed.add(n)
         if (n > 0) {
-          v.withColumn("batch_id", lit(batchId))
-            .write.mode(SaveMode.Append).parquet(s"$outDir/verdicts")
-          QualityFilter.metrics(v)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode(SaveMode.Append).parquet(s"$outDir/metrics")
+          ParquetCatalog.writer(v.withColumn("batch_id", lit(batchId)))
+            .mode(SaveMode.Append).parquet(s"$outDir/verdicts")
+          ParquetCatalog.writer(QualityFilter.metrics(v)
+            .withColumn("batch_id", lit(batchId)))
+            .mode(SaveMode.Append).parquet(s"$outDir/metrics")
         }
         v.unpersist()
         ()

@@ -159,11 +159,11 @@ object StreamingProfileJob {
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
-      docs.filter(col("c_custkey") % 2 === 1).select("doc")
-        .write.mode(SaveMode.Append).parquet(in)
+      ParquetCatalog.writer(docs.filter(col("c_custkey") % 2 === 1)
+        .select("doc")).mode(SaveMode.Append).parquet(in)
       runOnce(spark, in, out, ckpt) // lifecycle 1: odd custkeys
-      docs.filter(col("c_custkey") % 2 === 0).select("doc")
-        .write.mode(SaveMode.Append).parquet(in)
+      ParquetCatalog.writer(docs.filter(col("c_custkey") % 2 === 0)
+        .select("doc")).mode(SaveMode.Append).parquet(in)
       runOnce(spark, in, out, ckpt) // lifecycle 2: resumes from checkpoint
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     val projected = spark.read.parquet(s"$out/current")

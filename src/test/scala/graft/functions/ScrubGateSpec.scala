@@ -83,6 +83,16 @@ class ScrubGateSpec extends AnyFunSuite {
     tail <- Gen.choose(3, 5).flatMap(digits)
   } yield pre + areaForm + mid + s2 + tail
 
+  /** Phone-gate near misses: an area code with nothing after it, the
+    * 7-digit tail alone, and a 10-digit run with no separator.
+    */
+  private val phoneNearMiss: Gen[String] = Gen.oneOf(
+    for { a <- digits(3); post <- Gen.oneOf("", " ", "-", "x") }
+      yield s"($a)$post",
+    for { a <- digits(3); s1 <- Gen.oneOf("-", ".", " "); b <- digits(4) }
+      yield a + s1 + b,
+    digits(10))
+
   private val ssnish: Gen[String] = Gen.oneOf(
     for { a <- digits(3); b <- digits(2); c <- digits(4) } yield s"$a-$b-$c",
     for {
@@ -143,7 +153,8 @@ class ScrubGateSpec extends AnyFunSuite {
   private val nearMiss: Gen[String] = Gen.choose(1, 10).flatMap(n =>
     Gen.listOfN(n, for {
       piece <- Gen.frequency(
-        4 -> filler, 3 -> digitGroups, 3 -> phoneish, 2 -> ssnish,
+        4 -> filler, 3 -> digitGroups, 3 -> phoneish, 2 -> phoneNearMiss,
+        2 -> ssnish,
         2 -> cardish, 2 -> emailish, 2 -> akiaish, 2 -> toxicish,
         2 -> lookalike)
       end <- Gen.oneOf("", "", " ", "\n")
