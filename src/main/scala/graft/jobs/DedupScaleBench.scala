@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.TrainingOps
@@ -155,41 +155,55 @@ object DedupScaleBench {
     Point("minhash", n, b, r, cand, cand / (n + planted), found, wall, steal)
   }
 
-  /** IVF-ANN at scale with derived √N sizing ([[TrainingOps.ivfParams]]):
-    * 100 queries, each with 5 planted companions (the q31 contract at
-    * 1000× the universe); recall = companions retrieved in top-5.
-    * candPairs here = candidate rows scored (Σ probed-list occupancy).
+  private val PlantedQueries = 100
+
+  /** The ANN scale points' planted universe: n base vectors plus, for
+    * each of the first [[PlantedQueries]] (the queries), 5 companions at
+    * vec_id 20000000 + q·10 + k (the q31 contract at 1000× the universe).
+    * Returns (universe(vec_id, v), queries(query_id, qv)).
     */
-  def ivfPoint(spark: SparkSession, n: Long): Point = {
+  private def plantedUniverse(spark: SparkSession,
+      n: Long): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val nQueries = 100
     val base = spark.range(n).map(id => (id.toLong, vec(id)))
-    val comps = spark.range(nQueries).flatMap { q =>
+    val comps = spark.range(PlantedQueries).flatMap { q =>
       val v = vec(q)
       (0 until 5).iterator.map { k =>
         (20000000L + q * 10 + k,
           Array.tabulate(64)(i => v(i) + 0.01 * (k + 1) * v((i + 1) % 64)))
       }
     }
-    val uni = base.union(comps).toDF("vec_id", "v")
-    val queries = base.filter(_._1 < nQueries).toDF("query_id", "qv")
+    (base.union(comps).toDF("vec_id", "v"),
+      base.filter(_._1 < PlantedQueries).toDF("query_id", "qv"))
+  }
+
+  /** Companions a top-k result (query_id, neighbor_id) retrieved. */
+  private def companionsFound(topK: DataFrame): Long =
+    topK.filter(col("neighbor_id") >= 20000000L &&
+      expr("(neighbor_id - 20000000) div 10") === col("query_id")).count()
+
+  /** IVF-ANN at scale with derived √N sizing ([[TrainingOps.ivfParams]]):
+    * 100 queries, each with 5 planted companions (the q31 contract at
+    * 1000× the universe); recall = companions retrieved in top-5.
+    * candPairs here = candidate rows scored (Σ probed-list occupancy).
+    */
+  def ivfPoint(spark: SparkSession, n: Long): Point = {
+    val (uni, queries) = plantedUniverse(spark, n)
     val (lists, probe, trainCap) = TrainingOps.ivfParams(n)
 
     var found = 0L
     val t0 = System.nanoTime()
     val (steal, cpuEff) = witness { () =>
-      found = TrainingOps
-        .ivfAnnTopK(spark, uni, queries, lists, probe, trainCap)
-        .filter(col("neighbor_id") >= 20000000L &&
-          expr("(neighbor_id - 20000000) div 10") === col("query_id")).count()
+      found = companionsFound(TrainingOps
+        .ivfAnnTopK(spark, uni, queries, lists, probe, trainCap))
     }
     val wall = (System.nanoTime() - t0) / 1e9
     spark.catalog.clearCache()
     // candidate volume (rows scored) ≈ nQueries · N · probe/lists — the
     // derived √N sizing keeps the per-query fraction at probe/lists
-    val cand = nQueries.toDouble * n * probe / lists
+    val cand = PlantedQueries.toDouble * n * probe / lists
     Point("ivf", n, lists, probe, cand, cand / n, found, wall, steal,
-      plantedTotal = nQueries * 5, cpuEff = cpuEff)
+      plantedTotal = PlantedQueries * 5, cpuEff = cpuEff)
   }
 
   /** PQ ANN scale point — same planted-companion construction as
@@ -198,26 +212,13 @@ object DedupScaleBench {
     * code bytes per vector (m·⌈log₂k/8⌉) vs raw (64 dims × 8 B).
     */
   def pqPoint(spark: SparkSession, n: Long): String = {
-    import spark.implicits._
-    val nQueries = 100
-    val base = spark.range(n).map(id => (id.toLong, vec(id)))
-    val comps = spark.range(nQueries).flatMap { q =>
-      val v = vec(q)
-      (0 until 5).iterator.map { k =>
-        (20000000L + q * 10 + k,
-          Array.tabulate(64)(i => v(i) + 0.01 * (k + 1) * v((i + 1) % 64)))
-      }
-    }
-    val uni = base.union(comps).toDF("vec_id", "v")
-    val queries = base.filter(_._1 < nQueries).toDF("query_id", "qv")
+    val (uni, queries) = plantedUniverse(spark, n)
     val k = TrainingOps.pqParams(n)
     var found = 0L
     val t0 = System.nanoTime()
     val (steal, cpuEff) = witness { () =>
-      found = TrainingOps
-        .pqAnnTopK(spark, uni, queries, nHint = Some(n))
-        .filter(col("neighbor_id") >= 20000000L &&
-          expr("(neighbor_id - 20000000) div 10") === col("query_id")).count()
+      found = companionsFound(TrainingOps
+        .pqAnnTopK(spark, uni, queries, nHint = Some(n)))
     }
     val wall = (System.nanoTime() - t0) / 1e9
     spark.catalog.clearCache()
@@ -226,7 +227,7 @@ object DedupScaleBench {
     f"""{"kind":"pq","n":$n,"m":${TrainingOps.PqM},"k":$k,""" +
       f""""code_bytes":$codeBytes,"raw_bytes":512,""" +
       f""""compression":${512.0 / codeBytes}%.0f,""" +
-      f""""planted_found":$found,"planted_total":${nQueries * 5},""" +
+      f""""planted_found":$found,"planted_total":${PlantedQueries * 5},""" +
       f""""wall_sec":$wall%.2f,"steal_pct":$steal%.2f,""" +
       f""""cpu_eff":$cpuEff%.3f}"""
   }
@@ -236,35 +237,22 @@ object DedupScaleBench {
     * top of the PQ compression; recall on the planted companions.
     */
   def ivfPqPoint(spark: SparkSession, n: Long): String = {
-    import spark.implicits._
-    val nQueries = 100
-    val base = spark.range(n).map(id => (id.toLong, vec(id)))
-    val comps = spark.range(nQueries).flatMap { q =>
-      val v = vec(q)
-      (0 until 5).iterator.map { k =>
-        (20000000L + q * 10 + k,
-          Array.tabulate(64)(i => v(i) + 0.01 * (k + 1) * v((i + 1) % 64)))
-      }
-    }
-    val uni = base.union(comps).toDF("vec_id", "v")
-    val queries = base.filter(_._1 < nQueries).toDF("query_id", "qv")
+    val (uni, queries) = plantedUniverse(spark, n)
     val (lists, probe, trainCap) = TrainingOps.ivfParams(n)
     val k = TrainingOps.pqParams(n)
     var found = 0L
     val t0 = System.nanoTime()
     val (steal, cpuEff) = witness { () =>
-      found = TrainingOps
+      found = companionsFound(TrainingOps
         .ivfPqAnnTopK(spark, uni, queries, lists, probe, trainCap,
-          nHint = Some(n))
-        .filter(col("neighbor_id") >= 20000000L &&
-          expr("(neighbor_id - 20000000) div 10") === col("query_id")).count()
+          nHint = Some(n)))
     }
     val wall = (System.nanoTime() - t0) / 1e9
     spark.catalog.clearCache()
     f"""{"kind":"ivfpq","n":$n,"lists":$lists,"probe":$probe,""" +
       f""""m":${TrainingOps.PqM},"k":$k,""" +
       f""""scored_fraction":${probe.toDouble / lists}%.4f,""" +
-      f""""planted_found":$found,"planted_total":${nQueries * 5},""" +
+      f""""planted_found":$found,"planted_total":${PlantedQueries * 5},""" +
       f""""wall_sec":$wall%.2f,"steal_pct":$steal%.2f,""" +
       f""""cpu_eff":$cpuEff%.3f}"""
   }
@@ -393,18 +381,8 @@ object DedupScaleBench {
     */
   def lshannPoint(spark: SparkSession, n: Long): Point = {
     import spark.implicits._
-    val nQueries = 100
-    val base = spark.range(n).map(id => (id.toLong, vec(id)))
-    val comps = spark.range(nQueries).flatMap { q =>
-      val v = vec(q)
-      (0 until 5).iterator.map { k =>
-        (20000000L + q * 10 + k,
-          Array.tabulate(64)(i => v(i) + 0.01 * (k + 1) * v((i + 1) % 64)))
-      }
-    }
-    val uni = base.union(comps).toDF("vec_id", "v")
-    val queries = base.filter(_._1 < nQueries).toDF("query_id", "qv")
-    val nTotal = n + nQueries * 5
+    val (uni, queries) = plantedUniverse(spark, n)
+    val nTotal = n + PlantedQueries * 5
     val (tables, bits) = TrainingOps.lshAnnParams(nTotal)
     // measured candidates/query from the same bucket surface the
     // pipeline joins on (distinct pre-verify pairs)
@@ -422,16 +400,14 @@ object DedupScaleBench {
     var found = 0L
     val t0 = System.nanoTime()
     val (steal, cpuEff) = witness { () =>
-      found = TrainingOps
-        .lshAnnTopK(spark, uni, queries, nHint = Some(nTotal))
-        .filter(col("neighbor_id") >= 20000000L &&
-          expr("(neighbor_id - 20000000) div 10") === col("query_id")).count()
+      found = companionsFound(TrainingOps
+        .lshAnnTopK(spark, uni, queries, nHint = Some(nTotal)))
     }
     val wall = (System.nanoTime() - t0) / 1e9
     spark.catalog.clearCache()
     Point("lshann", n, tables, bits, cand.toDouble,
-      cand.toDouble / nQueries, found, wall, steal,
-      plantedTotal = nQueries * 5, cpuEff = cpuEff)
+      cand.toDouble / PlantedQueries, found, wall, steal,
+      plantedTotal = PlantedQueries * 5, cpuEff = cpuEff)
   }
 
   /** SimHash at scale with DERIVED banding (r4 verdict item 1): block

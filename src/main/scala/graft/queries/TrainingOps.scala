@@ -448,20 +448,46 @@ object TrainingOps {
     * Scale: O(Q·N) — correct but linear; q19 is the bucketed path.
     */
   def q18CosineTopK(spark: SparkSession, dir: String): DataFrame = {
+    val (emb, queries) = annNaturalUniverse(spark, dir)
+    rankTopK(emb.join(broadcast(queries), col("vec_id") =!= col("query_id")))
+  }
+
+  /** The natural-corpus ANN input over `embeddings`: every vector as the
+    * universe (vec_id, v), the first [[NQueries]] as queries (query_id,
+    * qv). q18 scans it exactly; the recall specs feed it to each
+    * approximate `*TopK` and compare with q18.
+    */
+  def annNaturalUniverse(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
     val emb = t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val queries = emb.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosineCol(col("qv"), col("v")))
+    (emb, emb.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv")))
+  }
+
+  /** The exact tail of every top-k path: cosine of each (qv, v) row of
+    * `scored`, ranked per query by (cos desc, vec_id), cut at [[TopK]].
+    * Output (query_id, neighbor_id, rank), ordered.
+    */
+  private def rankTopK(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     scored
+      .withColumn("cos", cosineCol(col("qv"), col("v")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
   }
+
+  /** Exact rerank of candidate pairs (query_id, vec_id) against the true
+    * vectors: the approximate paths' shared [[rankTopK]] input.
+    */
+  private def rerank(cand: DataFrame, queries: DataFrame,
+      uni: DataFrame): DataFrame =
+    rankTopK(cand
+      .join(queries.select(col("query_id"), col("qv")), "query_id")
+      .join(uni.select(col("vec_id"), col("v")), "vec_id"))
 
   private val LshSeed = 42
 
@@ -584,29 +610,7 @@ object TrainingOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
-    val vecs = uni.select(col("vec_id"), col("v"))
-    val scored = cand
-      .join(queries.select(col("query_id"), col("qv")), "query_id")
-      .join(vecs, "vec_id")
-      .withColumn("cos", cosineCol(col("qv"), col("v")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** LSH ANN over the natural corpus (first [[NQueries]] vectors as
-    * queries) — the recall-measured path (LshAnnSpec, vs exact q18).
-    */
-  def lshAnn(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val queries = emb.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    lshAnnTopK(spark, emb, queries)
+    rerank(cand, queries, uni)
   }
 
   val AnnCompanions = 5
@@ -620,9 +624,7 @@ object TrainingOps {
     */
   def annPlantedUniverse(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val base = t(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .filter(col("vec_id") < 500)
+    val base = annNaturalUniverse(spark, dir)._1.filter(col("vec_id") < 500)
     val q = base.filter(col("vec_id") < NQueries)
     val comps = q
       .select(col("vec_id"), col("v"),
@@ -653,12 +655,10 @@ object TrainingOps {
     * cosine ≥ threshold, via LSH bucketing (candidates) + exact verify.
     * (tables, bits) are derived from the corpus size and threshold by
     * [[lshParams]] — bits bound bucket occupancy as N grows, tables hold
-    * the per-pair miss probability ≤ 1e-6 — at the cost of one count()
-    * pass (at scale, reuse a catalog rowcount instead).
-    */
-  /** `nHint`: corpus size for LSH sizing — pass the catalog rowcount when
-    * known (it only steers log2 bucket sizing, so a coarse value is
-    * fine); None falls back to a count() pass.
+    * the per-pair miss probability ≤ 1e-6. `nHint` is that corpus size:
+    * pass the catalog rowcount when known (it only steers log2 bucket
+    * sizing, so a coarse value is fine); None falls back to one count()
+    * pass.
     */
   def embeddingNearDups(spark: SparkSession, emb: DataFrame,
       threshold: Double, nHint: Option[Long] = None): DataFrame = {
@@ -769,28 +769,21 @@ object TrainingOps {
       Array(best)
     } else cents.indices.sortBy(c => sqDist(v, cents(c))).take(p).toArray
 
-  /** Chunk geometry shared by BOTH codebook trainers — the canonical
-    * merge order is a fixed two-level tree: rows fold sequentially
-    * within a 1024-row chunk, chunk partials fold in chunk order within
-    * a 64-chunk SUPERCHUNK, superchunk partials fold in superchunk order
-    * at the root. Every bracket is fixed by the sample order alone, so
-    * the result is bit-identical regardless of thread/executor
-    * scheduling AND the root merge receives 64× fewer partials than the
-    * r5 per-chunk collect (the r5 verdict watch item: at the 10⁹-vector
-    * ivfParams sizing, ~8 superchunk partials instead of ~495 per-chunk
-    * ones reach the driver per iteration).
+  /** Rows per assign task in [[kmeansTrain]]. The chunk boundaries depend
+    * on the sample order alone, and the chunk partials fold in chunk
+    * order, so the thread pool's scheduling never reaches the bits.
     */
   val KmeansChunk = 1024
-  val KmeansSuperFactor = 64
 
   /** Deterministic Lloyd's k-means over a driver-side sample (first-k
     * init; empty clusters keep their previous centroid). The assign step
-    * runs on a local thread pool over FIXED 1024-sample chunks whose
-    * partial sums merge through the canonical two-level tree above —
-    * bit-identical output regardless of thread scheduling, so the
-    * codebook (and therefore the q31 gate) stays run-to-run
-    * deterministic while √N-sized codebooks (DedupScaleBench: 708
-    * centroids × 11k samples) train in seconds instead of minutes.
+    * runs on a local thread pool over fixed [[KmeansChunk]]-row chunks;
+    * each chunk sums its rows in sample order from +0.0, and the chunk
+    * partials fold in chunk order. The codebook (and therefore the
+    * q31/q54/q55 gates) is bit-identical run to run, while √N-sized
+    * codebooks (DedupScaleBench: 708 centroids × 11k samples) train in
+    * seconds. The sample lives on the driver: sample × dim × 8 bytes,
+    * ~33 MB at ivfParams' 65,536-sample point (N ≈ 16.8M, 64 dims).
     */
   def kmeansTrain(samples: Array[Array[Double]], k: Int,
       iters: Int): Array[Array[Double]] = {
@@ -828,34 +821,15 @@ object TrainingOps {
         }
         val sums = Array.fill(k)(new Array[Double](dim))
         val counts = new Array[Long](k)
-        // canonical two-level merge: chunk partials fold into their
-        // superchunk in chunk order, superchunks fold at the root in
-        // superchunk order — same brackets as kmeansTrainDist
-        var scStart = 0
-        while (scStart < nChunks) {
-          val scEnd = math.min(scStart + KmeansSuperFactor, nChunks)
-          val scSums = Array.fill(k)(new Array[Double](dim))
-          val scCounts = new Array[Long](k)
-          var ci = scStart
-          while (ci < scEnd) {
-            val (ls, lc) = tasks(ci).get()
-            var c = 0
-            while (c < k) {
-              scCounts(c) += lc(c)
-              var i = 0
-              while (i < dim) { scSums(c)(i) += ls(c)(i); i += 1 }
-              c += 1
-            }
-            ci += 1
-          }
+        tasks.foreach { task => // chunk order
+          val (ls, lc) = task.get()
           var c = 0
           while (c < k) {
-            counts(c) += scCounts(c)
+            counts(c) += lc(c)
             var i = 0
-            while (i < dim) { sums(c)(i) += scSums(c)(i); i += 1 }
+            while (i < dim) { sums(c)(i) += ls(c)(i); i += 1 }
             c += 1
           }
-          scStart = scEnd
         }
         cents = Array.tabulate(k) { c =>
           if (counts(c) == 0) cents(c)
@@ -867,176 +841,16 @@ object TrainingOps {
     } finally pool.shutdown()
   }
 
-  /** Executor-side deterministic Lloyd's k-means (r4 verdict item 2):
-    * the assign/partial-sum step runs on EXECUTORS over the same fixed
-    * 1024-row chunks of the vec_id-ordered sample that [[kmeansTrain]]
-    * feeds its thread pool, partitioned so a 64-chunk SUPERCHUNK never
-    * splits across executors; each executor folds its chunks into
-    * superchunk partials in chunk order (level 1 of the canonical tree),
-    * and only the SUPERCHUNK partials travel to the root, which folds
-    * them in superchunk order (level 2) — bit-identical output to
-    * [[kmeansTrain]] by construction: same chunk boundaries, same
-    * within-chunk row order (superchunk-aligned repartition +
-    * sortWithinPartitions), same two-level brackets, and skipping an
-    * absent cluster's exact +0.0 contribution leaves every IEEE sum
-    * unchanged. q31's codebook therefore stays byte-stable while the
-    * O(sample·k·dim) distance work leaves the driver: at 10⁹ vectors
-    * ([[ivfParams]] → ~506k samples × 31.6k centroids ≈ 10¹⁰ distance
-    * ops/iter) the root merge receives ~8 sparse superchunk partials per
-    * iteration — 64× less than the r5 per-chunk collect this replaced
-    * (the r5 verdict watch item).
+  /** A codebook's training sample: the first `cap` vectors of `uni`
+    * (vec_id, v) in vec_id order, collected to the driver.
     */
-  def kmeansTrainDist(spark: SparkSession, sampleIn: DataFrame, k: Int,
-      iters: Int): Array[Array[Double]] = {
+  private def trainSample(spark: SparkSession, uni: DataFrame,
+      cap: Int): Array[Array[Double]] = {
     import spark.implicits._
-    val chunkSz = KmeansChunk
-    // (chunk, ord, v): ord = dense position in vec_id order — the sorted
-    // input is one TakeOrdered partition here (sample ≤ trainCap rows),
-    // so zipWithIndex preserves exactly kmeansTrain's sample order. The
-    // ASSIGN stage stays chunk-partitioned for parallelism (one task per
-    // chunk, like the pool's one callable per chunk).
-    val samples = spark.createDataset(
-      sampleIn.select(col("vec_id"), col("v"))
-        .sort(col("vec_id")).as[(Long, Seq[Double])].rdd
-        .zipWithIndex.map { case ((_, v), ord) =>
-          (ord / chunkSz, ord, v.toArray)
-        })
-      .toDF("chunk", "ord", "v")
-      .repartition(col("chunk"))
-      .sortWithinPartitions(col("chunk"), col("ord"))
-      .as[(Long, Long, Array[Double])]
-      .cache()
-    val m = samples.count()
-    require(m >= k, s"need >= $k training vectors, got $m")
-    var cents = samples.filter(_._2 < k).collect().sortBy(_._2)
-      .map(_._3.clone)
-    val dim = cents.head.length
-    var it = 0
-    while (it < iters) {
-      val bc = spark.sparkContext.broadcast(cents)
-      // stage 1 (assign): per-chunk sparse partials, parallel by chunk
-      val chunkPartials = samples.mapPartitions { rows =>
-        val cur = bc.value
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Int, Long, Array[Double])]
-        var curChunk = -1L
-        var acc = new java.util.TreeMap[Int, (Array[Double], Long)]()
-        def flush(): Unit = {
-          if (curChunk >= 0) {
-            val itr = acc.entrySet().iterator()
-            while (itr.hasNext) {
-              val e = itr.next()
-              out += ((curChunk, e.getKey, e.getValue._2, e.getValue._1))
-            }
-            acc = new java.util.TreeMap[Int, (Array[Double], Long)]()
-          }
-        }
-        rows.foreach { case (chunk, _, v) =>
-          if (chunk != curChunk) { flush(); curChunk = chunk }
-          val c = nearestLists(v, cur, 1)(0)
-          val slot = acc.get(c)
-          val (sum, cnt) =
-            if (slot == null) (new Array[Double](v.length), 0L) else slot
-          var i = 0
-          while (i < v.length) { sum(i) += v(i); i += 1 }
-          acc.put(c, (sum, cnt + 1))
-        }
-        flush()
-        out.iterator
-      }
-      // stage 2 (level-1 reduce, ON EXECUTORS): fold chunk partials into
-      // superchunk partials — per (sc, cluster), contributions arrive
-      // chunk-ascending via the sort, so the fold brackets match the
-      // pool's chunk-order fold exactly. Only these travel to the root.
-      val scPartials = chunkPartials
-        .map { case (chunk, c, cnt, sum) =>
-          (chunk / KmeansSuperFactor, chunk, c, cnt, sum)
-        }
-        .toDF("sc", "chunk", "cluster", "cnt", "sum")
-        .repartition(col("sc"))
-        .sortWithinPartitions(col("sc"), col("cluster"), col("chunk"))
-        .as[(Long, Long, Int, Long, Array[Double])]
-        .mapPartitions { rows =>
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Int, Long, Array[Double])]
-          var curSc = -1L
-          var curCl = -1
-          var sum: Array[Double] = null
-          var cnt = 0L
-          def flush(): Unit = {
-            if (sum != null) out += ((curSc, curCl, cnt, sum))
-            sum = null; cnt = 0L
-          }
-          rows.foreach { case (sc, _, c, n, s) =>
-            if (sc != curSc || c != curCl) {
-              flush(); curSc = sc; curCl = c; sum = s.clone(); cnt = n
-            } else {
-              var i = 0
-              while (i < sum.length) { sum(i) += s(i); i += 1 }
-              cnt += n
-            }
-          }
-          flush()
-          out.iterator
-        }
-      // root: fold superchunk partials in (sc, cluster) order — at the
-      // 10⁹-vector sizing ~8 sparse partials/iter instead of ~495
-      val partials = scPartials.collect().sortBy(p => (p._1, p._2))
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val counts = new Array[Long](k)
-      partials.foreach { case (_, c, cnt, s) =>
-        counts(c) += cnt
-        var i = 0
-        while (i < dim) { sums(c)(i) += s(i); i += 1 }
-      }
-      cents = Array.tabulate(k) { c =>
-        if (counts(c) == 0) cents(c)
-        else { val s = sums(c); s.map(_ / counts(c)) }
-      }
-      bc.destroy()
-      it += 1
-    }
-    samples.unpersist()
-    cents
+    uni.select(col("vec_id"), col("v")).sort(col("vec_id")).limit(cap)
+      .as[(Long, Seq[Double])].collect().map(_._2.toArray)
   }
 
-  /** Sample-size threshold for the codebook-trainer strategy switch.
-    * Both trainers are BIT-IDENTICAL (KmeansParitySpec), so this is
-    * purely an execution choice: at ≤ this many samples the driver
-    * thread-pool wins (0.79 s pool vs 5.7 s executor-side at 708×11,328,
-    * BENCH.md "Round-5 dedup/ANN scale evidence" and "kmeans root-merge
-    * shrink" — per-iteration Spark job dispatch dominates small
-    * samples), while above it the sample must not live on the driver at
-    * all (ivfParams grows it as 16·√N: ~506k×64 doubles and ~10¹⁰
-    * distance ops/iter at 10⁹ vectors) and [[kmeansTrainDist]] keeps
-    * the O(sample·k·dim) work on executors.
-    */
-  val KmeansDriverSampleCap = 100000L
-
-  /** Codebook trainer with the size-based strategy switch above. The
-    * result is the same bit pattern either way, so the q31 gate and
-    * every recall measurement are invariant to which path ran.
-    */
-  def kmeansTrainAuto(spark: SparkSession, sampleIn: DataFrame, k: Int,
-      iters: Int): Array[Array[Double]] = {
-    import spark.implicits._
-    val sample = sampleIn.cache()
-    val m = sample.count()
-    val cents =
-      if (m <= KmeansDriverSampleCap) {
-        val arr = sample.select(col("vec_id"), col("v"))
-          .sort(col("vec_id")).as[(Long, Seq[Double])]
-          .collect().map(_._2.toArray)
-        kmeansTrain(arr, k, iters)
-      } else kmeansTrainDist(spark, sample, k, iters)
-    sample.unpersist()
-    cents
-  }
-
-  /** IVF approximate top-k cosine neighbours of `queries` (query_id, qv)
-    * within `uni` (vec_id, v) — same output contract as q18/q19
-    * (query_id, neighbor_id, rank).
-    */
   /** Derived IVF sizing for an N-vector corpus: lists ≈ √N (the standard
     * IVF operating point — probe cost N·probe/lists stays ~√N·probe per
     * query), training sample 16 vectors per centroid, probe count scaled
@@ -1050,55 +864,43 @@ object TrainingOps {
     (lists, probe, trainCap)
   }
 
-  def ivfAnnTopK(spark: SparkSession, uniIn: DataFrame,
-      queries: DataFrame, lists: Int = IvfLists, probe: Int = IvfProbe,
-      trainCap: Int = IvfTrainCap): DataFrame = {
+  /** The IVF coarse stage of [[ivfAnnTopK]] and [[ivfPqAnnTopK]]: a
+    * `lists`-centroid codebook on the vec_id-ordered sample, each vector's
+    * nearest list (vec_id, list_id) and each query's `probe` nearest
+    * lists (query_id, list_id).
+    */
+  private def ivfLists(spark: SparkSession, uni: DataFrame,
+      queries: DataFrame, lists: Int, probe: Int,
+      trainCap: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val uni = uniIn.cache() // reused: codebook sample, assign, verify join
-    val e = uni.select(col("vec_id"), col("v")).as[(Long, Seq[Double])]
-    // codebook from a deterministic sample (vec_id order, capped);
-    // trainer strategy switches on sample size (kmeansTrainAuto) and both
-    // strategies are bit-identical, so the q31 gate is unchanged
-    val cents = kmeansTrainAuto(spark,
-      e.sort(col("vec_id")).limit(trainCap).toDF("vec_id", "v"),
-      lists, IvfIters)
-    val bc = spark.sparkContext.broadcast(cents)
-
-    val assigned = e.map { case (id, v) =>
-      (id, nearestLists(v.toArray, bc.value, 1)(0))
-    }.toDF("vec_id", "list_id")
-    val vecs = uni.select(col("vec_id"), col("v"))
-
+    val bc = spark.sparkContext.broadcast(
+      kmeansTrain(trainSample(spark, uni, trainCap), lists, IvfIters))
+    val assigned = uni.select(col("vec_id"), col("v"))
+      .as[(Long, Seq[Double])].map { case (id, v) =>
+        (id, nearestLists(v.toArray, bc.value, 1)(0))
+      }.toDF("vec_id", "list_id")
     val probes = queries.select(col("query_id"), col("qv"))
       .as[(Long, Seq[Double])].flatMap { case (id, v) =>
         nearestLists(v.toArray, bc.value, probe).iterator.map(l => (id, l))
       }.toDF("query_id", "list_id")
+    (assigned, probes)
+  }
 
+  /** IVF approximate top-k cosine neighbours of `queries` (query_id, qv)
+    * within `uni` (vec_id, v) — same output contract as q18/q19
+    * (query_id, neighbor_id, rank). `uni` is cached: the codebook
+    * sample, the assignment and the rerank all read it.
+    */
+  def ivfAnnTopK(spark: SparkSession, uniIn: DataFrame,
+      queries: DataFrame, lists: Int = IvfLists, probe: Int = IvfProbe,
+      trainCap: Int = IvfTrainCap): DataFrame = {
+    val uni = uniIn.cache()
+    val (assigned, probes) =
+      ivfLists(spark, uni, queries, lists, probe, trainCap)
     val cand = broadcast(probes).join(assigned, Seq("list_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
-    val scored = cand
-      .join(queries.select(col("query_id"), col("qv")), "query_id")
-      .join(vecs, "vec_id")
-      .withColumn("cos", cosineCol(col("qv"), col("v")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** IVF ANN over the natural corpus (first [[NQueries]] vectors as
-    * queries) — the recall-measured path (IvfAnnSpec, vs exact q18).
-    */
-  def ivfAnn(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val queries = emb.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    ivfAnnTopK(spark, emb, queries)
+    rerank(cand, queries, uni)
   }
 
   /** q31 — IVF ANN E2E under the same planted-companion contract as q19:
@@ -1143,24 +945,15 @@ object TrainingOps {
   def pqParams(n: Long): Int =
     math.min(256L, math.max(16L, n / 32)).toInt
 
-  /** Train the m sub-codebooks: deterministic k-means (the shared
-    * [[kmeansTrainAuto]] machinery — bit-identical driver/executor
-    * paths) per subspace over a vec_id-ordered sample of 16·k vectors.
-    * m sequential small jobs; each subspace is dim/m wide so the total
-    * training cost is ONE k-means over the sample regardless of m.
+  /** Train the m sub-codebooks: one collect of the vec_id-ordered sample
+    * of 16·k vectors (≤ 4096 rows, since pqParams caps k at 256), sliced
+    * per subspace on the driver, then [[kmeansTrain]] per slice. Each
+    * subspace is dim/m wide, so the total training cost is ONE k-means
+    * over the sample regardless of m.
     */
   def pqTrain(spark: SparkSession, uniIn: DataFrame, m: Int, k: Int,
       iters: Int = PqIters): Array[Array[Array[Double]]] = {
-    import spark.implicits._
-    // ONE collect of the vec_id-ordered sample, sliced per subspace on
-    // the driver (r7): the sample is ≤ 16·k ≤ 4096 rows by construction
-    // (pqParams caps k at 256), far under KmeansDriverSampleCap, so the
-    // old per-subspace kmeansTrainAuto round-trips (m × cache+count+
-    // collect = 24 driver jobs at m=8) collapsed to one job. Same rows,
-    // same order, same slices → kmeansTrain output is bit-identical.
-    val rows = uniIn.select(col("vec_id"), col("v"))
-      .sort(col("vec_id")).limit(16 * k)
-      .as[(Long, Seq[Double])].collect().map(_._2.toArray)
+    val rows = trainSample(spark, uniIn, 16 * k)
     val dim = rows.head.length
     require(dim % m == 0, s"dim $dim must be divisible by m=$m")
     val sub = dim / m
@@ -1196,6 +989,63 @@ object TrainingOps {
       }.toDF("vec_id", "codes")
   }
 
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** A query's PQ lookup table: lut(j)(c) = q_j · cent_jc. */
+  private final case class PqLut(qid: Long, lut: Array[Array[Double]],
+      qNorm: Double)
+
+  /** Per-query lookup tables in query_id order, built on the driver
+    * (queries are small by the q18/q19 contract), plus the shared
+    * code-word squared norms nlut(j)(c) = |cent_jc|².
+    */
+  private def pqLuts(spark: SparkSession, queries: DataFrame,
+      cb: Array[Array[Array[Double]]]): (Array[PqLut], Array[Array[Double]]) = {
+    import spark.implicits._
+    val m = cb.length
+    val luts = queries.select(col("query_id"), col("qv"))
+      .as[(Long, Seq[Double])].collect().sortBy(_._1).map { case (qid, qv) =>
+        val arr = qv.toArray
+        val sub = arr.length / m
+        PqLut(qid, Array.tabulate(m) { j =>
+          val qj = java.util.Arrays.copyOfRange(arr, j * sub, (j + 1) * sub)
+          cb(j).map(c => dot(qj, c))
+        }, math.sqrt(dot(arr, arr)))
+      }
+    (luts, cb.map(_.map(c => dot(c, c))))
+  }
+
+  /** Approximate cosine of a query and a PQ code (-1 on a zero norm). Both
+    * table sums run in fixed subspace order, so the score does not depend
+    * on the partition layout.
+    */
+  private def pqApprox(q: PqLut, nlut: Array[Array[Double]],
+      code: Array[Int]): Double = {
+    var d = 0.0; var n2 = 0.0; var j = 0
+    while (j < code.length) {
+      d += q.lut(j)(code(j)); n2 += nlut(j)(code(j)); j += 1
+    }
+    if (n2 > 0 && q.qNorm > 0) d / (q.qNorm * math.sqrt(n2)) else -1.0
+  }
+
+  /** The PQ paths' tail: cut each query's (query_id, vec_id, approx)
+    * candidates to the best `pool` under (approx desc, vec_id), then
+    * [[rerank]] them exactly.
+    */
+  private def pqRerank(approx: DataFrame, pool: Int, queries: DataFrame,
+      uni: DataFrame): DataFrame = {
+    val wPool = Window.partitionBy(col("query_id"))
+      .orderBy(col("approx").desc, col("vec_id"))
+    rerank(approx
+      .withColumn("prank", row_number().over(wPool))
+      .filter(col("prank") <= pool)
+      .select(col("query_id"), col("vec_id")), queries, uni)
+  }
+
   /** PQ approximate top-k cosine neighbours — same output contract as
     * q18/q19/q31 (query_id, neighbor_id, rank). Pipeline: train m
     * sub-codebooks → encode the corpus → asymmetric-distance scan (each
@@ -1206,8 +1056,7 @@ object TrainingOps {
     * only shuffle carries partitions·pool rows, never N·Q) → global pool
     * cut → EXACT cosine rerank on the fetched true vectors.
     *
-    * Determinism: LUT sums run in fixed subspace order per (query,
-    * vector) so approx scores are partition-layout-free; the bounded
+    * Determinism: [[pqApprox]] is partition-layout-free; the bounded
     * heap keeps the best `pool` under the total order (approx desc,
     * vec_id asc); the global cut re-applies the same order — so the
     * candidate set, and hence the exact-reranked output, is invariant
@@ -1226,27 +1075,7 @@ object TrainingOps {
     val k = kOverride.getOrElse(pqParams(n))
     val cb = pqTrain(spark, uni, m, k)
     val codes = pqEncode(spark, uni, cb).cache()
-
-    // per-query lookup tables, driver-built (queries are small by the
-    // q18/q19 contract): lut(j)(c) = q_j · cent_jc; shared nlut = |cent|²
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    val qRows = queries.select(col("query_id"), col("qv"))
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val nlut = cb.map(_.map(c => dot(c, c)))
-    val luts = qRows.map { case (qid, qv) =>
-      val arr = qv.toArray
-      val sub = arr.length / m
-      val lut = Array.tabulate(m) { j =>
-        val qj = java.util.Arrays.copyOfRange(arr, j * sub, (j + 1) * sub)
-        cb(j).map(c => dot(qj, c))
-      }
-      (qid, lut, math.sqrt(dot(arr, arr)))
-    }
-    val bcLut = spark.sparkContext.broadcast((luts, nlut))
+    val bcLut = spark.sparkContext.broadcast(pqLuts(spark, queries, cb))
     val poolN = pool
 
     // asymmetric-distance scan with map-side bounded top-pool selection
@@ -1261,14 +1090,8 @@ object TrainingOps {
         val code = codeSeq.toArray
         var qi = 0
         while (qi < qs.length) {
-          val (qid, lut, qNorm) = qs(qi)
-          if (vid != qid) {
-            var d = 0.0; var n2 = 0.0; var j = 0
-            while (j < code.length) {
-              d += lut(j)(code(j)); n2 += nl(j)(code(j)); j += 1
-            }
-            val approx =
-              if (n2 > 0 && qNorm > 0) d / (qNorm * math.sqrt(n2)) else -1.0
+          if (vid != qs(qi).qid) {
+            val approx = pqApprox(qs(qi), nl, code)
             val h = heaps(qi)
             if (h.size < poolN) h.enqueue((approx, vid))
             else {
@@ -1281,39 +1104,11 @@ object TrainingOps {
           qi += 1
         }
       }
-      heaps.iterator.zip(qs.iterator).flatMap { case (h, (qid, _, _)) =>
-        h.iterator.map { case (a, vid) => (qid, vid, a) }
+      heaps.iterator.zip(qs.iterator).flatMap { case (h, q) =>
+        h.iterator.map { case (a, vid) => (q.qid, vid, a) }
       }
     }.toDF("query_id", "vec_id", "approx")
-
-    // global pool cut under the same total order, then exact rerank
-    val wPool = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val cand = partTop
-      .withColumn("prank", row_number().over(wPool))
-      .filter(col("prank") <= pool)
-      .select(col("query_id"), col("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    cand
-      .join(queries.select(col("query_id"), col("qv")), "query_id")
-      .join(uni.select(col("vec_id"), col("v")), "vec_id")
-      .withColumn("cos", cosineCol(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** PQ ANN over the natural corpus (first [[NQueries]] vectors as
-    * queries) — the recall-measured path (PqAnnSpec, vs exact q18).
-    */
-  def pqAnn(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val queries = emb.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    pqAnnTopK(spark, emb, queries)
+    pqRerank(partTop, pool, queries, uni)
   }
 
   /** IVF-PQ ANN — the production composition of the two scale paths:
@@ -1329,8 +1124,8 @@ object TrainingOps {
     * list_id (the ivfAnnTopK join), scored with the per-query LUT in a
     * typed map (no heap needed — IVF already pruned the volume), global
     * pool cut, exact rerank. Determinism: both codebooks train on the
-    * vec_id-ordered sample; LUT sums run in fixed subspace order; the
-    * pool cut uses the (approx desc, vec_id) total order.
+    * vec_id-ordered sample; [[pqApprox]] runs in fixed subspace order;
+    * the pool cut uses the (approx desc, vec_id) total order.
     *
     * Caching: `uni` and the list-assigned code frame stay cached for
     * the multi-pass plan; like minhashBandBuckets the bench/Verify
@@ -1345,85 +1140,25 @@ object TrainingOps {
     val uni = uniIn.cache()
     val n = nHint.getOrElse(uni.count())
     val k = kOverride.getOrElse(pqParams(n))
-    val e = uni.select(col("vec_id"), col("v")).as[(Long, Seq[Double])]
-
-    // coarse (IVF) codebook + nearest-list assignment
-    val cents = kmeansTrainAuto(spark,
-      e.sort(col("vec_id")).limit(trainCap).toDF("vec_id", "v"),
-      lists, IvfIters)
-    val bcC = spark.sparkContext.broadcast(cents)
-    val assigned = e.map { case (id, v) =>
-      (id, nearestLists(v.toArray, bcC.value, 1)(0))
-    }.toDF("vec_id", "list_id")
-
+    val (assigned, probes) =
+      ivfLists(spark, uni, queries, lists, probe, trainCap)
     // fine (PQ) codebooks + codes, co-located with the list assignment
     val cb = pqTrain(spark, uni, m, k)
     val codes = pqEncode(spark, uni, cb).join(assigned, "vec_id").cache()
-
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
+    val bcLut = spark.sparkContext.broadcast {
+      val (luts, nlut) = pqLuts(spark, queries, cb)
+      (luts.map(q => q.qid -> q).toMap, nlut)
     }
-    val qRows = queries.select(col("query_id"), col("qv"))
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val nlut = cb.map(_.map(c => dot(c, c)))
-    val luts = qRows.map { case (qid, qv) =>
-      val arr = qv.toArray
-      val sub = arr.length / m
-      qid -> (Array.tabulate(m) { j =>
-        val qj = java.util.Arrays.copyOfRange(arr, j * sub, (j + 1) * sub)
-        cb(j).map(c => dot(qj, c))
-      }, math.sqrt(dot(arr, arr)))
-    }.toMap
-    val bcLut = spark.sparkContext.broadcast((luts, nlut))
-
-    val probes = qRows.iterator.flatMap { case (qid, qv) =>
-      nearestLists(qv.toArray, bcC.value, probe).iterator.map(l => (qid, l))
-    }.toSeq.toDF("query_id", "list_id")
 
     val scored = broadcast(probes).join(codes, Seq("list_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("codes"))
       .as[(Long, Long, Seq[Int])]
-      .map { case (qid, vid, codeSeq) =>
+      .map { case (qid, vid, code) =>
         val (qs, nl) = bcLut.value
-        val (lut, qNorm) = qs(qid)
-        val code = codeSeq.toArray
-        var d = 0.0; var n2 = 0.0; var j = 0
-        while (j < code.length) {
-          d += lut(j)(code(j)); n2 += nl(j)(code(j)); j += 1
-        }
-        val approx =
-          if (n2 > 0 && qNorm > 0) d / (qNorm * math.sqrt(n2)) else -1.0
-        (qid, vid, approx)
+        (qid, vid, pqApprox(qs(qid), nl, code.toArray))
       }.toDF("query_id", "vec_id", "approx")
-
-    val wPool = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val cand = scored
-      .withColumn("prank", row_number().over(wPool))
-      .filter(col("prank") <= pool)
-      .select(col("query_id"), col("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    cand
-      .join(queries.select(col("query_id"), col("qv")), "query_id")
-      .join(uni.select(col("vec_id"), col("v")), "vec_id")
-      .withColumn("cos", cosineCol(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** IVF-PQ over the natural corpus — the recall-measured path. */
-  def ivfPqAnn(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val queries = emb.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    ivfPqAnnTopK(spark, emb, queries)
+    pqRerank(scored, pool, queries, uni)
   }
 
   /** q55 — IVF-PQ E2E under the planted-companion contract: companions

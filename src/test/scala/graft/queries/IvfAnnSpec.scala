@@ -10,11 +10,16 @@ class IvfAnnSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  private def ivfAnn = {
+    val (uni, queries) = TrainingOps.annNaturalUniverse(spark, dir)
+    TrainingOps.ivfAnnTopK(spark, uni, queries)
+  }
+
   test("recall@5 vs exact cosine top-k") {
     val exact = TrainingOps.q18CosineTopK(spark, dir).collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
-    val approx = TrainingOps.ivfAnn(spark, dir).collect()
+    val approx = ivfAnn.collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
     assert(approx.keySet == exact.keySet)
@@ -27,13 +32,13 @@ class IvfAnnSpec extends SparkSpec {
   }
 
   test("output contract: ranks 1..k per query, deterministic") {
-    val rows = TrainingOps.ivfAnn(spark, dir).collect()
+    val rows = ivfAnn.collect()
     val byQ = rows.groupBy(_.getLong(0))
     byQ.values.foreach { rs =>
       assert(rs.map(_.getInt(2)).sorted.toSeq == (1 to rs.length))
       assert(rs.length <= TrainingOps.TopK)
     }
-    val again = TrainingOps.ivfAnn(spark, dir).collect()
+    val again = ivfAnn.collect()
     assert(rows.map(_.toString).sorted.toSeq == again.map(_.toString).sorted.toSeq)
   }
 

@@ -15,7 +15,10 @@ class LshAnnSpec extends SparkSpec {
       r.getLong(r.fieldIndex("neighbor_id")))).toSet
 
   private lazy val exact = TrainingOps.q18CosineTopK(spark, dir).collect()
-  private lazy val ann = TrainingOps.lshAnn(spark, dir).collect()
+  private lazy val ann = {
+    val (uni, queries) = TrainingOps.annNaturalUniverse(spark, dir)
+    TrainingOps.lshAnnTopK(spark, uni, queries).collect()
+  }
 
   test("brute force returns a full top-5 per query, self excluded") {
     val byQ = exact.groupBy(_.getLong(0))

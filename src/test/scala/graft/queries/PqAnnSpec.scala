@@ -13,6 +13,8 @@ class PqAnnSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  private def natural = TrainingOps.annNaturalUniverse(spark, dir)
+
   private def emb = spark.read.parquet(s"$dir/embeddings.parquet")
     .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
@@ -41,7 +43,10 @@ class PqAnnSpec extends SparkSpec {
     val exact = TrainingOps.q18CosineTopK(spark, dir).collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
-    val approx = TrainingOps.pqAnn(spark, dir).collect()
+    val approx = {
+      val (uni, queries) = natural
+      TrainingOps.pqAnnTopK(spark, uni, queries)
+    }.collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
     assert(approx.keySet == exact.keySet)
@@ -66,7 +71,10 @@ class PqAnnSpec extends SparkSpec {
     val exact = TrainingOps.q18CosineTopK(spark, dir).collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
-    val approx = TrainingOps.ivfPqAnn(spark, dir).collect()
+    val approx = {
+      val (uni, queries) = natural
+      TrainingOps.ivfPqAnnTopK(spark, uni, queries)
+    }.collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
     assert(approx.keySet == exact.keySet)
