@@ -1,7 +1,9 @@
 package graft.filter
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.functions.PiiScrub
@@ -17,7 +19,8 @@ import graft.model.FileRecord
   *     → repartitionByRange(p, bucket, hash(path))       // skew-breaking
   *     → mapPartitions: langid + KN nll (models broadcast, scored per row)
   *     → Catalyst: heuristics + scrub_pii + keep        // whole-stage codegen
-  *     → write kept/verdicts + per-bucket metrics
+  *     → observe [[tally]] → write verdicts              // one result stage
+  *   then the per-bucket metrics rows come from the observed [[tally]]
   *
   * The two model scorers run inside ONE mapPartitions so each row is
   * deserialized once; everything downstream is pure `Column` algebra.
@@ -134,14 +137,51 @@ object QualityFilter {
       .drop("scrub")
   }
 
+  /** The per-row terms [[metrics]] sums per bucket, in its column order. */
+  private val terms: Seq[(String, Column)] = Seq(
+    "rows_in" -> lit(1L),
+    "rows_kept" -> when(col("keep"), 1L).otherwise(0L),
+    "rows_dropped" -> when(!col("keep"), 1L).otherwise(0L),
+    "bytes_in" -> length(col("content")).cast("long"),
+    "bytes_kept" ->
+      when(col("keep"), length(col("scrubbed"))).otherwise(0L).cast("long"),
+    "pii_rows" -> when(size(col("pii_types")) > 0, 1L).otherwise(0L))
+
   /** Per-bucket lineage + quality metrics (north rule checkpoint unit). */
   def metrics(verdicts: DataFrame): DataFrame =
-    verdicts.groupBy(col("bucket")).agg(
-      count(lit(1)).as("rows_in"),
-      sum(when(col("keep"), 1L).otherwise(0L)).as("rows_kept"),
-      sum(when(!col("keep"), 1L).otherwise(0L)).as("rows_dropped"),
-      sum(length(col("content")).cast("long")).as("bytes_in"),
-      sum(when(col("keep"), length(col("scrubbed"))).otherwise(0L)
-        .cast("long")).as("bytes_kept"),
-      sum(when(size(col("pii_types")) > 0, 1L).otherwise(0L)).as("pii_rows"))
+    verdicts.groupBy(col("bucket")).agg(count(lit(1)).as("rows_in"),
+      terms.tail.map { case (name, t) => sum(t).as(name) }: _*)
+
+  /** Sums an input row (bucket, its six [[terms]]) into a flat array,
+    * bucket-major. */
+  private object Tally extends Aggregator[Array[Long], Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](MetricsBuckets * terms.size)
+    def reduce(acc: Array[Long], row: Array[Long]): Array[Long] = {
+      val at = row(0).toInt * terms.size - 1
+      for (i <- 1 until row.length) acc(at + i) += row(i)
+      acc
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      for (i <- a.indices) a(i) += b(i)
+      a
+    }
+    def finish(acc: Array[Long]): Array[Long] = acc
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  /** [[metrics]] of every bucket as ONE aggregate column, for an
+    * `Observation` over verdict rows: bucket b's six sums sit at
+    * [6b, 6b + 6) in [[metrics]]' column order.
+    */
+  val tally: Column = udaf(Tally).apply(
+    array(col("bucket").cast("long") +: terms.map(_._2): _*)).as("tally")
+
+  /** [[metrics]]' rows from an observed [[tally]] value: one per bucket
+    * that holds rows, in bucket order.
+    */
+  def tallyRows(observed: Any): Seq[Row] =
+    observed.asInstanceOf[collection.Seq[Long]].grouped(terms.size).zipWithIndex
+      .collect { case (sums, b) if sums.head > 0 => Row.fromSeq(b +: sums.toSeq) }
+      .toSeq
 }

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.filter.{KnLm, LangId, QualityFilter}
@@ -21,10 +21,13 @@ import graft.model.FileRecord
   *      same bucket, so tasks hold contiguous bucket ranges; write
   *      verdicts `partitionBy(bucket)` with dynamic partition overwrite
   *      (idempotent per bucket on re-run), one file per (task, bucket) —
-  *      at most 64 + tasks − 1 files
-  *   4. ONLY THEN append the buckets' metrics rows — the metrics append is
-  *      the commit marker, so a crash between 3 and 4 re-does those
-  *      buckets instead of losing them
+  *      at most 64 + tasks − 1 files. The write observes the per-bucket
+  *      metrics ([[QualityFilter.tally]]) in the same tasks, so scoring
+  *      is one pass: no cache, no second scan for metrics or totals
+  *   4. ONLY THEN append the observed buckets' metrics rows — the metrics
+  *      append is the commit marker, so a crash between 3 and 4 re-does
+  *      those buckets instead of losing them. A run that scored no row
+  *      appends nothing and returns the committed totals
   *
   * Usage: runMain graft.jobs.QualityFilterJob <inputParquet> <outDir>
   */
@@ -38,7 +41,8 @@ object QualityFilterJob {
     spark.stop()
   }
 
-  /** Returns (kept, dropped, alreadyDoneBuckets). */
+  /** Returns (kept, dropped, alreadyDoneBuckets): this run's rows, or the
+    * committed totals when it scored none. */
   def run(spark: SparkSession, input: String, outDir: String): (Long, Long, Int) = {
     import spark.implicits._
     val cat = new graft.catalog.ParquetCatalog(outDir)
@@ -47,32 +51,36 @@ object QualityFilterJob {
     val km = spark.sparkContext.broadcast(KnLm.load(BuildFixtures.KnLmModelPath))
 
     // 1-2. resume: skip buckets whose metrics are committed
-    val done: Set[Int] = cat.read(spark, "metrics")
-      .map(_.select("bucket").distinct().as[Int].collect().toSet)
-      .getOrElse(Set.empty)
-    val all = spark.read.parquet(input).as[FileRecord]
+    val committed = cat.read(spark, "metrics")
+      .map(_.select("bucket", "rows_kept", "rows_dropped")
+        .as[(Int, Long, Long)].collect().toSeq)
+      .getOrElse(Nil)
+    val done = committed.map(_._1).toSet
+    val all = spark.read.schema(FileRecord.schema).parquet(input).as[FileRecord]
     val todo =
       if (done.isEmpty) all
       else all.filter(
         !QualityFilter.bucketOf(col("repo"), col("path")).isin(done.toSeq: _*))
 
-    if (todo.isEmpty) {
-      val m = cat.read(spark, "metrics").get
-        .agg(sum("rows_kept"), sum("rows_dropped")).head()
-      return (m.getLong(0), m.getLong(1), done.size)
-    }
+    // 3. pipeline + verdict write (idempotent per bucket), observing the
+    // per-bucket metrics. Counted exactly once only because the observed
+    // node sits in the write's result stage, above the range exchange:
+    // Spark applies a result task's accumulator updates once per
+    // partition, so retried and speculative copies add nothing, while a
+    // shuffle-map stage gives no such guarantee. FilterLayoutSpec pins it.
+    val v = QualityFilter.verdicts(spark, todo, lm, km)
+    val observed = Observation()
+    cat.overwritePartitions(v.observe(observed, QualityFilter.tally),
+      "verdicts", Seq("bucket"))
+    val rows = QualityFilter.tallyRows(observed.get("tally"))
+    if (rows.isEmpty)
+      return (committed.map(_._2).sum, committed.map(_._3).sum, done.size)
 
-    // 3. pipeline + verdict write (idempotent per bucket)
-    val v = QualityFilter.verdicts(spark, todo, lm, km).cache()
-    cat.overwritePartitions(v.toDF(), "verdicts", Seq("bucket"))
-
-    // 4. commit marker: append metrics for the buckets just completed
-    cat.appendMarker(QualityFilter.metrics(v).toDF(), "metrics")
-
-    val agg = v.agg(
-      sum(when(col("keep"), 1L).otherwise(0L)),
-      sum(when(!col("keep"), 1L).otherwise(0L))).head()
-    v.unpersist()
-    (agg.getLong(0), agg.getLong(1), done.size)
+    // 4. commit marker: append metrics for the buckets just completed, in
+    // one file, under the schema `metrics` would have written
+    cat.appendMarker(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), QualityFilter.metrics(v).schema),
+      "metrics")
+    (rows.map(_.getLong(2)).sum, rows.map(_.getLong(3)).sum, done.size)
   }
 }

@@ -1,5 +1,8 @@
 package graft.model
 
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.types.StructType
+
 /** Core data model for the graft engine.
   *
   * The primary input shape follows BASELINE.json `input_hint`: a table of
@@ -17,6 +20,11 @@ final case class FileRecord(
     lang: String,
     content: String
 )
+
+object FileRecord {
+  /** The input read schema: a parquet read under it skips footer inference. */
+  val schema: StructType = Encoders.product[FileRecord].schema
+}
 
 /** Quality-filter verdict for one file (north rule).
   *

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 import graft.catalog.ParquetCatalog
 import graft.filter.{KnLm, LangId, QualityFilter}
@@ -26,11 +25,6 @@ import graft.model.FileRecord
   */
 object StreamingFilterJob {
 
-  val fileRecordSchema: StructType = StructType(Seq(
-    StructField("repo", StringType), StructField("path", StringType),
-    StructField("commit", StringType), StructField("lang", StringType),
-    StructField("content", StringType)))
-
   /** Run one availableNow pass; returns rows processed in this pass. */
   def runOnce(spark: SparkSession, inputDir: String, outDir: String,
       checkpointDir: String): Long = {
@@ -40,7 +34,7 @@ object StreamingFilterJob {
     val processed = spark.sparkContext.longAccumulator("rows_processed")
 
     val stream = spark.readStream
-      .schema(fileRecordSchema)
+      .schema(FileRecord.schema)
       .parquet(inputDir)
 
     val q = stream.writeStream
