@@ -49,11 +49,9 @@ object CurationBench {
   def mixPoint(spark: SparkSession, n: Long): String = {
     val docs = corpus(spark, n)
     var rows: Array[org.apache.spark.sql.Row] = Array.empty
-    val t0 = System.nanoTime()
-    val (steal, cpuEff) = DedupScaleBench.witness { () =>
+    val (wall, steal, cpuEff) = DedupScaleBench.witness { () =>
       rows = CurationOps.mixtureStats(docs).collect()
     }
-    val wall = (System.nanoTime() - t0) / 1e9
     // exact doc counts per lang from the construction (doc_id % 1000)
     def bucketCount(lo: Long, hi: Long): Long =
       (n / 1000) * (hi - lo) + math.max(0L, math.min(n % 1000, hi) - lo)
@@ -91,8 +89,7 @@ object CurationBench {
       .head().getLong(0)
     def run(shards: Int): (Double, Double, Double, Boolean) = {
       var ok = false
-      val t0 = System.nanoTime()
-      val (steal, cpuEff) = DedupScaleBench.witness { () =>
+      val (wall, steal, cpuEff) = DedupScaleBench.witness { () =>
         val agg = CurationOps.packSequences(docs, budget, shards)
           .agg(sum(col("n_docs")).as("d"), sum(col("seq_tokens")).as("t"),
             sum(when(col("seq_tokens") > budget && col("n_docs") > 1, 1L)
@@ -101,7 +98,7 @@ object CurationBench {
         ok = agg.getLong(0) == n && agg.getLong(1) == totalTokens &&
           agg.getLong(2) == 0L
       }
-      ((System.nanoTime() - t0) / 1e9, steal, cpuEff, ok)
+      (wall, steal, cpuEff, ok)
     }
     run(32) // warmup, untimed
     val (w1, s1, e1, ok1) = run(1)
@@ -134,14 +131,12 @@ object CurationBench {
       .toDF("doc_id", "text").cache()
     docs.count() // materialize outside the timed region
     var flagged: Set[Long] = Set.empty
-    val t0 = System.nanoTime()
-    val (steal, cpuEff) = DedupScaleBench.witness { () =>
+    val (wall, steal, cpuEff) = DedupScaleBench.witness { () =>
       flagged = CurationOps.decontaminationReport(docs,
           isEval = col("doc_id") >= 1000000000L, minOverlap = 10)
         .filter(col("contaminated")).select(col("doc_id"))
         .collect().map(_.getLong(0)).toSet
     }
-    val wall = (System.nanoTime() - t0) / 1e9
     docs.unpersist()
     val want = (0 until planted).map(i => i.toLong * 7).filter(_ < n).toSet
     val exact = flagged == want
@@ -192,14 +187,11 @@ object CurationBench {
       .agg(sum(col("n_tokens")), sum(col("top_uni")), sum(col("n_bigrams")),
         sum(col("top_big")), sum(col("dup_big"))).head()
     var fastSum: org.apache.spark.sql.Row = null
-    val t0 = System.nanoTime()
-    val (s1, e1) = DedupScaleBench.witness { () =>
+    val (wFast, s1, e1) = DedupScaleBench.witness { () =>
       fastSum = checksum(CurationOps.repetitionMetrics(docs))
     }
-    val wFast = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val (s2, e2) = DedupScaleBench.witness { () => checksum(classicRep(docs)) }
-    val wClassic = (System.nanoTime() - t1) / 1e9
+    val (wClassic, s2, e2) =
+      DedupScaleBench.witness { () => checksum(classicRep(docs)) }
     // per-doc equality of the sorted-run shortcut vs true frequency
     // counting, across ALL n docs — the scale-level correctness verdict
     val fast = CurationOps.repetitionMetrics(docs)
@@ -251,7 +243,7 @@ object CurationBench {
   }
 
   def forkPoint(spark: SparkSession, m: Long): String = {
-    import graft.queries.ContainerOps
+    import graft.queries.{ContainerOps, TrainingOps}
     val planted = 50
     val threshold = 0.7
     val docs = forkCorpus(spark, m, planted).cache()
@@ -261,8 +253,7 @@ object CurationBench {
     // inverted-index groupBy must shuffle), plus its wall + verdict
     var exactPairs = Set.empty[(String, String)]
     var pairMass = 0L
-    val t0 = System.nanoTime()
-    val (s1, e1) = DedupScaleBench.witness { () =>
+    val (wExact, s1, e1) = DedupScaleBench.witness { () =>
       val sim = ContainerOps.containerSimilarity(docs, "cid").cache()
       pairMass = sim.count()
       exactPairs = sim.filter(col("jaccard") >= threshold)
@@ -271,23 +262,19 @@ object CurationBench {
       sim.unpersist()
       ()
     }
-    val wExact = (System.nanoTime() - t0) / 1e9
     spark.catalog.clearCache(); docs.cache(); docs.count()
     // minhash-path candidate mass from bucket occupancies (untimed
     // diagnostic — it shares the signing stages the timed run repeats)
-    val candMass = ContainerOps.containerBandBuckets(docs, "cid", threshold)
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("c"))
-      .agg(sum(col("c") * (col("c") - 1))).head().getLong(0) / 2
+    val candMass = TrainingOps.occupancyMass(
+      ContainerOps.containerBandBuckets(docs, "cid", threshold), "band", "bh")
     spark.catalog.clearCache(); docs.cache(); docs.count()
     // the full verified minhash pipeline, timed
     var mhPairs = Set.empty[(String, String)]
-    val t1 = System.nanoTime()
-    val (s2, e2) = DedupScaleBench.witness { () =>
+    val (wMh, s2, e2) = DedupScaleBench.witness { () =>
       mhPairs = ContainerOps.containerMinhashPairs(docs, "cid", threshold)
         .select("src_a", "src_b").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
     }
-    val wMh = (System.nanoTime() - t1) / 1e9
     docs.unpersist(); spark.catalog.clearCache()
     f"""{"kind":"fork","containers":$m,"docs":${(m + planted) * 8},""" +
       f""""planted":$planted,"exact_found":${exactPairs.size},""" +
@@ -317,8 +304,7 @@ object CurationBench {
     docs.count()
     var flagged = Set.empty[Long]
     var headCovered = 0L
-    val t0 = System.nanoTime()
-    val (steal, cpuEff) = DedupScaleBench.witness { () =>
+    val (wall, steal, cpuEff) = DedupScaleBench.witness { () =>
       val r = CurationOps.repeatedSpans(docs).cache()
       flagged = r.filter(col("mostly_dup")).select(col("doc_id"))
         .collect().map(_.getLong(0)).toSet
@@ -328,7 +314,6 @@ object CurationBench {
       r.unpersist()
       ()
     }
-    val wall = (System.nanoTime() - t0) / 1e9
     docs.unpersist(); spark.catalog.clearCache()
     val want = (0L until n).filter(_ % 1000 == 7).toSet
     // Extras beyond the planted set are NOT automatically failures: at
@@ -374,7 +359,6 @@ object CurationBench {
       case s => s
     }
     val spark = Sessions.scale()
-    spark.sparkContext.addSparkListener(DedupScaleBench.Clock)
     val out = ns.map { n =>
       mode match {
         case "pack" => packPoint(spark, n)

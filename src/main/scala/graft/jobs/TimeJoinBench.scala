@@ -50,8 +50,7 @@ object TimeJoinBench {
         col("event_id").as("view_event_id"))
     var violations = -1L
     var matched = -1L
-    val t0 = System.nanoTime()
-    val (s1, e1) = DedupScaleBench.witness { () =>
+    val (wWin, s1, e1) = DedupScaleBench.witness { () =>
       val r = graft.queries.TimeJoins.asofJoin(purchases, views,
         "user_id", "ts_us", carry = Seq("view_event_id"))
       val agg = r.agg(
@@ -66,11 +65,9 @@ object TimeJoinBench {
       violations = agg.getLong(0) + agg.getLong(2)
       matched = agg.getLong(1)
     }
-    val wWin = (System.nanoTime() - t0) / 1e9
     // naive formulation: theta-join + per-purchase argmax + join back
     var naiveMatched = -1L
-    val t1 = System.nanoTime()
-    val (s2, e2) = DedupScaleBench.witness { () =>
+    val (wNaive, s2, e2) = DedupScaleBench.witness { () =>
       val pairs = purchases.as("p").join(views.as("v"),
         col("p.user_id") === col("v.user_id") &&
           col("v.ts_us") <= col("p.ts_us"))
@@ -84,7 +81,6 @@ object TimeJoinBench {
             best("best") === views("ts_us"))
         .count()
     }
-    val wNaive = (System.nanoTime() - t1) / 1e9
     ev.unpersist()
     f"""{"kind":"${if (fixedUsers > 0) "asof_density" else "asof"}","n":$n,"users":$users,"matched":$matched,""" +
       f""""violations":$violations,"naive_matched":$naiveMatched,""" +
@@ -127,20 +123,16 @@ object TimeJoinBench {
       (r.getLong(0), r.getLong(1))
     }
     var cPlain: (Long, Long) = null
-    val t0 = System.nanoTime()
-    val (s1, e1) = DedupScaleBench.witness { () =>
+    val (wPlain, s1, e1) = DedupScaleBench.witness { () =>
       cPlain = checksum(graft.queries.TimeJoins.asofJoin(
         purchases, views, "user_id", "ts_us", Seq("view_event_id")))
     }
-    val wPlain = (System.nanoTime() - t0) / 1e9
     var cBuck: (Long, Long) = null
     val width = math.max(1L, n / 64)
-    val t1 = System.nanoTime()
-    val (s2, e2) = DedupScaleBench.witness { () =>
+    val (wBuck, s2, e2) = DedupScaleBench.witness { () =>
       cBuck = checksum(graft.queries.TimeJoins.asofJoinBucketed(
         purchases, views, "user_id", "ts_us", Seq("view_event_id"), width))
     }
-    val wBuck = (System.nanoTime() - t1) / 1e9
     ev.unpersist()
     f"""{"kind":"asof_skew","n":$n,"users":${users + 1},""" +
       f""""hot_share":0.95,"checksums_equal":${cPlain == cBuck},""" +
@@ -164,8 +156,7 @@ object TimeJoinBench {
       (col("id") * 1000L + 700L).as("end_us"))
     var ok = false
     var rows = -1L
-    val t0 = System.nanoTime()
-    val (s1, e1) = DedupScaleBench.witness { () =>
+    val (wall, s1, e1) = DedupScaleBench.witness { () =>
       val r = graft.queries.TimeJoins.rangeJoinAgg(ev, ivs, "ts_us",
         "window_id", "start_us", "end_us", bucketWidth = 128L,
         aggs = Seq(count(lit(1)).as("n_events")))
@@ -175,7 +166,6 @@ object TimeJoinBench {
       rows = agg.getLong(0)
       ok = rows == nIv && agg.getLong(1) == 0L
     }
-    val wall = (System.nanoTime() - t0) / 1e9
     ev.unpersist()
     f"""{"kind":"range","n":$n,"intervals":$nIv,"windows_out":$rows,""" +
       f""""all_700_exact":$ok,"wall_sec":$wall%.2f,""" +
@@ -189,7 +179,6 @@ object TimeJoinBench {
       case s => s
     }
     val spark = Sessions.scale()
-    spark.sparkContext.addSparkListener(DedupScaleBench.Clock)
     val out = ns.map { n =>
       mode match {
         case "range" => rangePoint(spark, n)

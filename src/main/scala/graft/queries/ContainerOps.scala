@@ -205,7 +205,7 @@ object ContainerOps {
     * signature/banding stages EXACTLY (the
     * [[TrainingOps.minhashBandBuckets]] pattern): (cid, band, bh) rows,
     * so benches can compute candidate-join mass from bucket occupancies
-    * (Σ c·(c−1)/2 per bucket) without materializing the join.
+    * ([[TrainingOps.occupancyMass]]) without materializing the join.
     */
   def containerBandBuckets(docs: DataFrame, container: String = "source",
       threshold: Double = 0.05, targetMiss: Double = 1e-9,
@@ -226,11 +226,8 @@ object ContainerOps {
       grams.withColumnRenamed("cid", "doc_id"), r, b)
     // cand/cgrams stay cached across the verify joins; released by the
     // harness clearCache between queries (the shingle-family contract)
-    val cand = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("src_a"), col("b.doc_id").as("src_b"))
-      .distinct().cache()
+    val cand = TrainingOps.bucketSelfJoin(buckets, Seq("band", "bh"),
+      ("doc_id", "src_a", "src_b")).cache()
     val candIds = cand.select(col("src_a").as("cid"))
       .union(cand.select(col("src_b").as("cid"))).distinct()
     // candidates are few by construction (that is the point of banding),

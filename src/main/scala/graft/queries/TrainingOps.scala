@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -158,8 +158,8 @@ object TrainingOps {
 
   /** The banded-bucket stage of [[minhashLsh]] alone — (doc_id, band,
     * band_hash) rows. Diagnostic surface for scale evidence: candidate-
-    * join size can be computed from bucket occupancies (Σ c·(c−1)/2 per
-    * (band, bh)) WITHOUT materialising the join, which is how
+    * join size can be computed from bucket occupancies ([[occupancyMass]]
+    * over (band, bh)) WITHOUT materialising the join, which is how
     * DedupScaleBench proves candidates stay linear in N at 10⁶ docs.
     * Signs through [[bandedSignature]], the same signer as minhashLsh.
     */
@@ -204,6 +204,34 @@ object TrainingOps {
     (perDoc, buckets)
   }
 
+  /** THE bucketed candidate stage of the similarity family (q16, q17,
+    * q28, container MinHash): self-join `buckets` on its `keys` columns,
+    * keep `a.id < b.id`, and emit each co-bucketed pair once (the
+    * `distinct` removes the copies of a pair that collides in several
+    * bands or tables). `id` = (id column, left name, right name); `carry`
+    * names one more per-row column to emit for both sides, in the same
+    * (column, left, right) form.
+    */
+  private[graft] def bucketSelfJoin(buckets: DataFrame, keys: Seq[String],
+      id: (String, String, String),
+      carry: Option[(String, String, String)] = None): DataFrame = {
+    val on = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+      col(s"a.${id._1}") < col(s"b.${id._1}")
+    val out = (id +: carry.toSeq).flatMap { case (c, left, right) =>
+      Seq(col(s"a.$c").as(left), col(s"b.$c").as(right))
+    }
+    buckets.as("a").join(buckets.as("b"), on).select(out: _*).distinct()
+  }
+
+  /** Candidate-join mass of a bucket surface, Σ c·(c−1)/2 over the
+    * occupancy c of each `keys` bucket: the row count the self-join
+    * produces before its `distinct`, computed without materialising it.
+    */
+  def occupancyMass(buckets: DataFrame, keys: String*): Long =
+    buckets.groupBy(keys.map(col): _*).count()
+      .agg(coalesce(sum(col("count") * (col("count") - 1)), lit(0L)))
+      .head().getLong(0) / 2
+
   /** MinHash + LSH near-dup pairs at `threshold`, verified exact.
     *
     * Pipeline: shingle (DF-capped) → r·b xxhash64 min-signatures (ONE
@@ -230,11 +258,8 @@ object TrainingOps {
     val (perDoc, buckets) = bandedSignature(shingleTokens(sets, dfCap), r, b,
       Seq(collect_set(col("s")).as("shingles")))
     perDoc.cache()
-    val candidates = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
-      .distinct()
+    val candidates =
+      bucketSelfJoin(buckets, Seq("band", "bh"), ("doc_id", "doc_i", "doc_j"))
     // exact verify on candidates only, over the same DF-capped sets
     val fsets = perDoc.select(col("doc_id"), col("shingles"))
     candidates
@@ -303,7 +328,7 @@ object TrainingOps {
   /** The (table, key) rows for derived-banding SimHash: one row per
     * (doc, block-combination), key = concatenated exact block values.
     * Diagnostic surface mirroring [[minhashBandBuckets]] — candidate-join
-    * input size is Σ c·(c−1)/2 over (table, key) occupancies, which is
+    * input size is [[occupancyMass]] over (table, key), which is
     * how DedupScaleBench measures the collision curve without
     * materialising the join. Input must carry (doc_id, simhash).
     */
@@ -337,33 +362,44 @@ object TrainingOps {
     */
   def simhashPairs(spark: SparkSession, docs: DataFrame,
       maxHamming: Int = 3): DataFrame = {
-    import spark.implicits._
     // `hashed` stays cached past this call (same contract as
     // minhashBandBuckets): the count() that derives b forces it, and the
     // returned plan reads it on BOTH sides of the candidate self-join —
     // unpersisting before materialization would re-run the MD5 simhash
     // map twice. Harness-level spark.catalog.clearCache() between bench
     // attempts releases it.
+    val hashed = simhashes(docs).cache()
+    simhashBandedPairs(hashed,
+      simhashBlocks(hashed.count(), maxHamming), maxHamming)
+  }
+
+  /** The hashing stage of [[simhashPairs]]: (doc_id, simhash) over the
+    * whitespace tokens of `text`. Uncached; callers that read it twice
+    * cache it.
+    */
+  def simhashes(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
     // (r7: spread tried before the map, net-slower at sf0.1 — the MD5
     // pass is short enough there that the exchange cost dominates)
-    val hashed = docs
+    docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
       .as[(Long, Seq[String])]
       .map { case (id, toks) => (id, TrainingOps.simhash64(toks)) }
       .toDF("doc_id", "simhash")
-      .cache()
-    val b = simhashBlocks(hashed.count(), maxHamming)
-    val buckets = simhashBandBuckets(hashed, b, maxHamming)
-    buckets.as("a").join(buckets.as("b"),
-        col("a.table") === col("b.table") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"),
-        col("a.simhash").as("sh_i"), col("b.simhash").as("sh_j"))
-      .distinct()
+  }
+
+  /** The pair stage of [[simhashPairs]] over `hashed` (doc_id, simhash)
+    * at `b` blocks: (table, key) candidates, then the exact Hamming
+    * filter. Output (doc_i, doc_j, hamming).
+    */
+  def simhashBandedPairs(hashed: DataFrame, b: Int,
+      maxHamming: Int): DataFrame =
+    bucketSelfJoin(simhashBandBuckets(hashed, b, maxHamming),
+        Seq("table", "key"), ("doc_id", "doc_i", "doc_j"),
+        carry = Some(("simhash", "sh_i", "sh_j")))
       .withColumn("hamming", bit_count(col("sh_i").bitwiseXOR(col("sh_j"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("doc_i"), col("doc_j"), col("hamming"))
-  }
 
   /** q17 — SimHash near-dup pairs, EXACT by construction. 64-bit simhash
     * over token hashes (per-bit majority vote, term-frequency weighted),
@@ -592,25 +628,41 @@ object TrainingOps {
   def lshAnnTopK(spark: SparkSession, uniIn: DataFrame,
       queries: DataFrame, nHint: Option[Long] = None,
       designCos: Double = 0.9, targetMiss: Double = 1e-6): DataFrame = {
-    import spark.implicits._
     val uni = uniIn.cache() // reused: sizing count + bucketing + verify join
     val (tables, bits) =
       lshAnnParams(nHint.getOrElse(uni.count()), designCos, targetMiss)
-    val pl = allPlanes(tables, bits)
-    val e = uni.select(col("vec_id"), col("v")).as[(Long, Seq[Double])]
-    val buckets = e.flatMap { case (id, v) =>
-      pl.indices.iterator.map(t => (id, t, lshBucket(v, pl(t))))
-    }.toDF("vec_id", "tbl", "bucket")
-    val qe = queries.select(col("query_id"), col("qv"))
-      .as[(Long, Seq[Double])]
-    val qb = qe.flatMap { case (id, v) =>
-      pl.indices.iterator.map(t => (id, t, lshBucket(v, pl(t))))
-    }.toDF("query_id", "tbl", "bucket")
-    val cand = broadcast(qb).join(buckets, Seq("tbl", "bucket"))
+    rerank(lshAnnCandidates(uni, queries, allPlanes(tables, bits)),
+      queries, uni)
+  }
+
+  /** The candidate stage of [[lshAnnTopK]]: the distinct (query_id,
+    * vec_id) pairs, self excluded, whose vectors share a bucket in any
+    * table of `planes`. Queries are few, so their buckets broadcast.
+    */
+  def lshAnnCandidates(uni: DataFrame, queries: DataFrame,
+      planes: Array[Array[Array[Double]]]): DataFrame = {
+    import uni.sparkSession.implicits._
+    val buckets = lshBuckets(
+      uni.select(col("vec_id"), col("v")).as[(Long, Seq[Double])],
+      planes, "vec_id")
+    val qb = lshBuckets(
+      queries.select(col("query_id"), col("qv")).as[(Long, Seq[Double])],
+      planes, "query_id")
+    broadcast(qb).join(buckets, Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
-    rerank(cand, queries, uni)
+  }
+
+  /** THE LSH bucketer: one (id, tbl, bucket) row per vector and table of
+    * `planes`, the id column named `idCol`.
+    */
+  def lshBuckets(ds: Dataset[(Long, Seq[Double])],
+      planes: Array[Array[Array[Double]]], idCol: String): DataFrame = {
+    import ds.sparkSession.implicits._
+    ds.flatMap { case (id, v) =>
+      planes.indices.iterator.map(t => (id, t, lshBucket(v, planes(t))))
+    }.toDF(idCol, "tbl", "bucket")
   }
 
   val AnnCompanions = 5
@@ -669,15 +721,8 @@ object TrainingOps {
       .as[(Long, Seq[Double])]
       .cache()
     val (tables, bits) = lshParams(nHint.getOrElse(e.count()), threshold)
-    val pl = allPlanes(tables, bits)
-    val buckets = e.flatMap { case (id, v) =>
-      pl.indices.iterator.map(t => (id, t, lshBucket(v, pl(t))))
-    }.toDF("vec_id", "tbl", "bucket")
-    val cand = buckets.as("a").join(buckets.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_i"), col("b.vec_id").as("vec_j"))
-      .distinct()
+    val cand = bucketSelfJoin(lshBuckets(e, allPlanes(tables, bits), "vec_id"),
+      Seq("tbl", "bucket"), ("vec_id", "vec_i", "vec_j"))
     val vecs = e.toDF("vec_id", "v")
     cand
       .join(vecs.select(col("vec_id").as("vec_i"), col("v").as("va")), "vec_i")

@@ -249,4 +249,56 @@ class DedupScaleSpec extends SparkSpec {
     } yield (i, j, d)).toSet
     assert(got === brute)
   }
+
+  test("bucketSelfJoin emits each co-bucketed pair once with i < j; occupancyMass counts the pre-distinct rows") {
+    import spark.implicits._
+    // 60 ids × 4 bands over 5 hash values: most pairs collide in several
+    // bands, so a join without the distinct would repeat them
+    val rnd = new scala.util.Random(11)
+    val rows = for (id <- 0L until 60L; band <- 0 until 4)
+      yield (id, band, rnd.nextInt(5).toLong, id * 10)
+    val buckets = rows.toDF("doc_id", "band", "bh", "w")
+    val got = TrainingOps.bucketSelfJoin(buckets, Seq("band", "bh"),
+        ("doc_id", "doc_i", "doc_j"), carry = Some(("w", "w_i", "w_j")))
+      .select("doc_i", "doc_j", "w_i", "w_j").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val coBucketed = for {
+      (a, ba, ha, _) <- rows; (b, bb, hb, _) <- rows
+      if ba == bb && ha == hb && a < b
+    } yield (a, b)
+    val multi = coBucketed.groupBy(identity).count(_._2.size >= 2)
+    assert(multi > 100, s"only $multi pairs collide in ≥ 2 bands")
+    assert(got.length === got.toSet.size, "a pair was emitted twice")
+    assert(got.forall { case (i, j, wi, wj) =>
+      i < j && wi == i * 10 && wj == j * 10 })
+    assert(got.map(g => (g._1, g._2)).toSet === coBucketed.toSet)
+    assert(TrainingOps.occupancyMass(buckets, "band", "bh") ===
+      coBucketed.size.toLong)
+  }
+
+  test("lshAnnCandidates = the distinct co-bucketed (query, vector) pairs, self excluded") {
+    import spark.implicits._
+    val n = 2000
+    val vecs = (0 until n).map { i =>
+      val r = new scala.util.Random(300 + i)
+      (i.toLong, Array.fill(64)(r.nextGaussian()).toSeq)
+    }
+    // queries reuse universe ids, so every query meets itself in every
+    // table and the self exclusion is exercised
+    val queries = vecs.take(20)
+    val planes = TrainingOps.allPlanes(5, 6)
+    val got = TrainingOps.lshAnnCandidates(vecs.toDF("vec_id", "v"),
+        queries.toDF("query_id", "qv"), planes)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    def keys(v: Seq[Double]) = planes.map(TrainingOps.lshBucket(v, _)).toSeq
+    val vk = vecs.map { case (id, v) => (id, keys(v)) }
+    val brute = (for {
+      (q, qv) <- queries; qk = keys(qv); (id, k) <- vk
+      if id != q && qk.zip(k).exists { case (a, b) => a == b }
+    } yield (q, id)).toSet
+    assert(brute.size > 500 && brute.size < 20 * (n - 1) / 2,
+      s"${brute.size} candidates: planes too coarse or too fine to test")
+    assert(got.length === got.toSet.size, "a candidate was emitted twice")
+    assert(got.toSet === brute)
+  }
 }
