@@ -1,6 +1,6 @@
 package graft.export
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Catalog import (S21) — the reference's XLSX re-import
@@ -157,23 +157,17 @@ object Imports {
 
   /** Land imported field rows into the catalog tables under
     * `conflictMode` ∈ {skip, overwrite, fail}. Returns true if a write
-    * happened.
+    * happened (not for a sheet without field rows).
     *
-    * Writes go to the SHARED `fields/` table (same partitioning as
-    * `ProfileJob.run`) so the imported version is first-class, and any
-    * imported descriptions become annotation rows — the reference creates
-    * an Annotation per described field on import
-    * (`import_service.py:204-216`). Commit protocol: fields + annotations
-    * land first, the version row is the commit marker.
+    * `ProfileJob.commitVersion` lands the rows in the SHARED `fields/`
+    * table, so the imported version is first-class (schema hash
+    * "imported"); imported descriptions become annotation rows — the
+    * reference creates an Annotation per described field on import
+    * (`import_service.py:204-216`) — landed before the version marker.
     */
   def importInto(spark: SparkSession, outDir: String, dict: String,
       fields: DataFrame, conflictMode: String = "skip"): Boolean = {
-    val dictsPath = s"$outDir/dictionaries"
-    val exists = new java.io.File(dictsPath).exists() &&
-      spark.read.parquet(dictsPath)
-        .filter(col("dictionary") === dict).limit(1).count() > 0
-
-    if (exists) conflictMode match {
+    if (graft.jobs.ProfileJob.listed(spark, outDir, dict)) conflictMode match {
       case "skip" => return false
       case "fail" =>
         throw new IllegalStateException(s"dictionary '$dict' already exists")
@@ -181,18 +175,9 @@ object Imports {
       case m => throw new IllegalArgumentException(s"unknown conflict mode: $m")
     }
 
-    val cat = new graft.catalog.ParquetCatalog(outDir)
-    val version =
-      graft.jobs.ProfileJob.latestVersion(spark, outDir, dict) + 1
-    cat.overwritePartitions(
-      conformToProfile(fields)
-        .withColumn("dictionary", lit(dict))
-        .withColumn("version_number", lit(version)),
-      "fields", Seq("dictionary", "version_number"))
-
     val described = fields.filter(
       col("description").isNotNull && col("description") =!= "")
-    if (!described.isEmpty) {
+    def annotate(version: Int): Unit = if (!described.isEmpty) {
       graft.catalog.Annotations.append(spark, outDir, described.select(
         lit(dict).as("dictionary"),
         lit(version).as("version_number"),
@@ -215,17 +200,7 @@ object Imports {
         lit("import").as("created_by")))
     }
 
-    val spark2 = spark
-    import spark2.implicits._
-    cat.appendMarker(
-      Seq((dict, version, "imported", fields.count()))
-        .toDF("dictionary", "version_number", "schema_hash", "n_fields"),
-      "versions")
-    if (!exists) {
-      cat.appendMarker(
-        Seq((dict, version)).toDF("dictionary", "created_version"),
-        "dictionaries")
-    }
-    true
+    graft.jobs.ProfileJob.commitVersion(spark, outDir, dict,
+      conformToProfile(fields), lit("imported"), annotate).nonEmpty
   }
 }

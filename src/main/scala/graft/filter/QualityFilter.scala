@@ -184,4 +184,12 @@ object QualityFilter {
     observed.asInstanceOf[collection.Seq[Long]].grouped(terms.size).zipWithIndex
       .collect { case (sums, b) if sums.head > 0 => Row.fromSeq(b +: sums.toSeq) }
       .toSeq
+
+  /** [[tallyRows]] as one partition under the schema [[metrics]] of
+    * `verdicts` writes: the frame a commit marker appends. */
+  def metricsFrame(verdicts: DataFrame, rows: Seq[Row]): DataFrame = {
+    val spark = verdicts.sparkSession
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      metrics(verdicts).schema)
+  }
 }

@@ -1,8 +1,9 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.ParquetCatalog
 import graft.model.FieldProfile
 import graft.profile.{Analysis, Profiler}
 
@@ -12,14 +13,15 @@ import graft.profile.{Analysis, Profiler}
   * `services/version_service.py:60-193`; SURVEY.md §3.1, S22) as Parquet
   * tables with Iceberg-shaped append semantics:
   *
-  *   out/dictionaries   (dictionary, created_version, record_count)
+  *   out/dictionaries   (dictionary, created_version)
   *   out/versions       (dictionary, version_number, schema_hash, n_fields)
   *   out/fields         partitioned by (dictionary, version_number)
   *
   * Each run appends version N+1 for the dictionary (the reference's
-  * re-profile flow); the fields write lands before the version row is
-  * appended, so the version append is the commit marker (a crashed run
-  * leaves no visible version — same protocol as QualityFilterJob).
+  * re-profile flow) through [[commitVersion]]: the fields write lands
+  * before the version row is appended, so the version append is the
+  * commit marker (a crashed run leaves no visible version — same protocol
+  * as QualityFilterJob).
   */
 object ProfileJob {
 
@@ -29,17 +31,70 @@ object ProfileJob {
     */
   val MaxContentBytes: Long = 500L * 1024 * 1024
 
+  /** (first, latest) committed version of `dict`, (0, 0) when none (W1):
+    * `versions` holds one row per version, so `dict`'s rows are collected.
+    */
+  private def versionRange(spark: SparkSession, cat: ParquetCatalog,
+      dict: String): (Int, Int) = {
+    val versions = cat.read(spark, "versions").toSeq.flatMap(
+      _.filter(col("dictionary") === dict).select(col("version_number"))
+        .collect().map(_.getInt(0)))
+    if (versions.isEmpty) (0, 0) else (versions.min, versions.max)
+  }
+
   def latestVersion(spark: SparkSession, outDir: String, dict: String): Int =
-    new graft.catalog.ParquetCatalog(outDir).read(spark, "versions") match {
-      case None => 0
-      case Some(versions) =>
-        // W1: max version per dictionary
-        versions.filter(col("dictionary") === dict)
-          .agg(coalesce(max(col("version_number")), lit(0))).head().getInt(0)
-    }
+    versionRange(spark, new ParquetCatalog(outDir), dict)._2
+
+  /** True when the `dictionaries` table holds a row for `dict`. */
+  def listed(spark: SparkSession, outDir: String, dict: String): Boolean =
+    new ParquetCatalog(outDir).read(spark, "dictionaries")
+      .exists(!_.filter(col("dictionary") === dict).isEmpty)
+
+  /** THE dictionary version commit: `fields` (FieldProfile columns) land
+    * as version latest+1 of `dict` in one pass — the `fields` write
+    * observes the row count and `hash`, the `versions` marker is appended
+    * from them. `beforeMarker(version)` lands data riding with the version.
+    * A missing `dictionaries` row is appended with the first committed
+    * version, so a crash before it heals on the next commit. Returns
+    * (version, hash), or None, committing nothing, when `fields` is empty.
+    */
+  def commitVersion(spark: SparkSession, outDir: String, dict: String,
+      fields: DataFrame, hash: Column = Profiler.schemaHashOf,
+      beforeMarker: Int => Unit = _ => ()): Option[(Int, String)] = {
+    val cat = new ParquetCatalog(outDir)
+    val (first, latest) = versionRange(spark, cat, dict)
+    val version = latest + 1
+    val observed = Observation()
+    cat.overwritePartitions(
+      fields.observe(observed, count(lit(1)).as("n_fields"),
+        hash.as("schema_hash"))
+        .withColumn("dictionary", lit(dict))
+        .withColumn("version_number", lit(version)),
+      "fields", Seq("dictionary", "version_number"))
+    val nFields = observed.get("n_fields").asInstanceOf[Long]
+    if (nFields == 0) return None
+    val schemaHash = observed.get("schema_hash").asInstanceOf[String]
+    beforeMarker(version)
+    import spark.implicits._
+    cat.appendMarker(
+      Seq((dict, version, schemaHash, nFields))
+        .toDF("dictionary", "version_number", "schema_hash", "n_fields"),
+      "versions")
+    if (!listed(spark, outDir, dict))
+      cat.appendMarker(
+        Seq((dict, if (first > 0) first else version))
+          .toDF("dictionary", "created_version"),
+        "dictionaries")
+    Some((version, schemaHash))
+  }
+
+  private def committed(dict: String, c: Option[(Int, String)]): (Int, String) =
+    c.getOrElse(throw new IllegalArgumentException(
+      s"dictionary '$dict': the input yields no field, nothing committed"))
 
   /** Profile `jsonCol` of `input` into version latest+1 of `dict`.
-    * Returns (versionNumber, schemaHash, fields).
+    * Returns (versionNumber, schemaHash, fields): the committed rows, read
+    * back. Throws IllegalArgumentException when the input yields no field.
     */
   def run(spark: SparkSession, input: DataFrame, jsonCol: String,
       outDir: String, dict: String,
@@ -47,31 +102,9 @@ object ProfileJob {
     val valid = input.filter(
       length(col(jsonCol)).cast("long") <= MaxContentBytes)
     val profiles = Analysis.profileAutoDetect(spark, valid, jsonCol, maxRecords)
-      .cache()
-    val hash = Profiler.schemaHash(profiles)
-    val version = latestVersion(spark, outDir, dict) + 1
-
-    val cat = new graft.catalog.ParquetCatalog(outDir)
-    cat.overwritePartitions(
-      profiles.toDF()
-        .withColumn("dictionary", lit(dict))
-        .withColumn("version_number", lit(version)),
-      "fields", Seq("dictionary", "version_number"))
-
-    val spark2 = spark
-    import spark2.implicits._
-    val nFields = profiles.count()
-    // commit marker: version row appended only after fields landed
-    cat.appendMarker(
-      Seq((dict, version, hash, nFields))
-        .toDF("dictionary", "version_number", "schema_hash", "n_fields"),
-      "versions")
-    if (version == 1) {
-      cat.appendMarker(
-        Seq((dict, 1)).toDF("dictionary", "created_version"), "dictionaries")
-    }
-    val out = (version, hash, profiles)
-    out
+    val (version, hash) =
+      committed(dict, commitVersion(spark, outDir, dict, profiles.toDF()))
+    (version, hash, readFields(spark, outDir, dict, version))
   }
 
   /** Recalculate quality metrics for the LATEST version of `dict` from
@@ -87,22 +120,7 @@ object ProfileJob {
     require(latest > 0, s"dictionary '$dict' has no committed version")
     val recalced =
       Analysis.recalculateQualityMetrics(readFields(spark, outDir, dict, latest))
-        .cache()
-    val hash = Profiler.schemaHash(recalced)
-    val version = latest + 1
-    val cat = new graft.catalog.ParquetCatalog(outDir)
-    cat.overwritePartitions(
-      recalced.toDF()
-        .withColumn("dictionary", lit(dict))
-        .withColumn("version_number", lit(version)),
-      "fields", Seq("dictionary", "version_number"))
-    val spark2 = spark
-    import spark2.implicits._
-    cat.appendMarker(
-      Seq((dict, version, hash, recalced.count()))
-        .toDF("dictionary", "version_number", "schema_hash", "n_fields"),
-      "versions")
-    version
+    committed(dict, commitVersion(spark, outDir, dict, recalced.toDF()))._1
   }
 
   /** Read one version's fields back as typed profiles (J2-shaped scoped

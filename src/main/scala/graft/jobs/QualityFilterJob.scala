@@ -78,9 +78,7 @@ object QualityFilterJob {
 
     // 4. commit marker: append metrics for the buckets just completed, in
     // one file, under the schema `metrics` would have written
-    cat.appendMarker(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), QualityFilter.metrics(v).schema),
-      "metrics")
+    cat.appendMarker(QualityFilter.metricsFrame(v, rows), "metrics")
     (rows.map(_.getLong(2)).sum, rows.map(_.getLong(3)).sum, done.size)
   }
 }

@@ -86,7 +86,7 @@ object Analysis {
   def profileAutoDetect(spark: SparkSession, df: DataFrame, jsonCol: String,
       maxRecords: Long = 0L): Dataset[FieldProfile] = {
     val isMongo = df.limit(100)
-      .agg(max(when(sniffMongo(df, jsonCol), 1).otherwise(0)))
+      .agg(coalesce(max(when(sniffMongo(df, jsonCol), 1).otherwise(0)), lit(0)))
       .head().getInt(0) == 1
     Profiler.profile(spark, df, jsonCol, mongo = isMongo, maxRecords)
   }

@@ -1,6 +1,6 @@
 package graft.profile
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
@@ -334,11 +334,10 @@ object Profiler {
     * we hash the inferred primary type — deterministic by construction
     * (divergence documented in SURVEY.md §7.4).
     */
-  def schemaHash(profiles: Dataset[FieldProfile]): String = {
-    val row = profiles
-      .select(concat_ws(":", col("fieldPath"), col("dataType")).as("sig"))
-      .agg(sha2(concat_ws("|", sort_array(collect_list(col("sig")))), 256))
-      .head()
-    row.getString(0)
-  }
+  def schemaHash(profiles: Dataset[FieldProfile]): String =
+    profiles.agg(schemaHashOf).head().getString(0)
+
+  /** [[schemaHash]] as one aggregate Column, for an observed write. */
+  val schemaHashOf: Column = sha2(concat_ws("|", sort_array(collect_list(
+    concat_ws(":", col("fieldPath"), col("dataType"))))), 256)
 }

@@ -152,7 +152,9 @@ object TrainingOps {
           math.ceil(math.log(targetMiss) / math.log(miss1)).toInt)
         (r, b)
       }
-      .find { case (r, b) => r * b <= maxPerms }
+      // in Long: at low thresholds b saturates at Int.MaxValue and an Int
+      // r * b wraps negative, passing the budget with an absurd band count
+      .find { case (r, b) => r.toLong * b <= maxPerms }
       .getOrElse((1, maxPerms))
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -33,26 +33,25 @@ object StreamingFilterJob {
     val km = spark.sparkContext.broadcast(KnLm.load(BuildFixtures.KnLmModelPath))
     val processed = spark.sparkContext.longAccumulator("rows_processed")
 
-    val stream = spark.readStream
-      .schema(FileRecord.schema)
-      .parquet(inputDir)
-
-    val q = stream.writeStream
+    val q = spark.readStream.schema(FileRecord.schema).parquet(inputDir)
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val records = batch.as[FileRecord]
-        val v = QualityFilter.verdicts(spark, records, lm, km).cache()
-        val n = v.count()
-        processed.add(n)
-        if (n > 0) {
-          ParquetCatalog.writer(v.withColumn("batch_id", lit(batchId)))
-            .mode(SaveMode.Append).parquet(s"$outDir/verdicts")
-          ParquetCatalog.writer(QualityFilter.metrics(v)
+        // one pass, as QualityFilterJob: the verdict append observes the
+        // per-bucket metrics in its result stage, above the range exchange
+        val v = QualityFilter.verdicts(spark, batch.as[FileRecord], lm, km)
+        val observed = Observation()
+        ParquetCatalog.writer(v.observe(observed, QualityFilter.tally)
             .withColumn("batch_id", lit(batchId)))
+          .mode(SaveMode.Append).parquet(s"$outDir/verdicts")
+        val rows = QualityFilter.tallyRows(observed.get("tally"))
+        if (rows.nonEmpty) {
+          processed.add(rows.map(_.getLong(1)).sum)
+          ParquetCatalog.writer(QualityFilter.metricsFrame(v, rows)
+              .withColumn("batch_id", lit(batchId)))
             .mode(SaveMode.Append).parquet(s"$outDir/metrics")
         }
-        v.unpersist()
         ()
       }
       .start()

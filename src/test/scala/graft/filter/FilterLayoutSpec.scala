@@ -2,8 +2,6 @@ package graft.filter
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -11,21 +9,20 @@ import scala.concurrent.duration._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.JobTrace
 import org.apache.spark.sql.{Row, SaveMode}
-import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
 import graft.jobs.{BuildFixtures, QualityFilterJob}
 import graft.model.FileRecord
+import graft.streaming.StreamingFilterJob
 
 /** Physical layout of the quality filter: the scoring shuffle ranges on
   * the lineage bucket, so the `partitionBy(bucket)` verdict write opens
@@ -107,33 +104,8 @@ class FilterLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     */
   private def tracedRun(out: String): ((Long, Long, Int), Int, Seq[SparkPlan]) = {
     val input = TinyCorpus.path // generated outside the counted group
-    val sc = spark.sparkContext
-    val group = s"filter-jobs-${new File(out).getName}"
-    val jobs = new AtomicInteger
-    val writes = new ConcurrentLinkedQueue[SparkPlan]
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val planListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (find(qe.executedPlan)(_.isInstanceOf[CollectMetricsExec]).nonEmpty)
-          writes.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    try {
-      sc.setJobGroup(group, "one QualityFilterJob.run")
-      val result = try QualityFilterJob.run(spark, input, out)
-        finally sc.clearJobGroup()
-      ListenerDrain(sc)
-      (result, jobs.get, writes.toArray(Array.empty[SparkPlan]).toSeq)
-    } finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(planListener)
+    JobTrace(spark, s"filter-jobs-${new File(out).getName}") {
+      QualityFilterJob.run(spark, input, out)
     }
   }
 
@@ -232,5 +204,30 @@ class FilterLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       5.minutes)
     assert(result == ((0L, 0L, 0)))
     assert(!new File(s"$out/metrics").exists())
+  }
+
+  test("a streaming micro-batch is one scoring pass: marker = metrics") {
+    val base = Files.createTempDirectory("graft_layout_stream").toString
+    val input = TinyCorpus.path
+    val group = s"filter-jobs-stream-${new File(base).getName}"
+    val (n, _, writes) = JobTrace(spark, group) {
+      StreamingFilterJob.runOnce(spark, input, s"$base/out", s"$base/ckpt")
+    }
+    assert(n == 2000)
+    assertObservedInResultStage(writes)
+    val marker = spark.read.parquet(s"$base/out/metrics")
+    val ref = QualityFilter.metrics(spark.read.parquet(s"$base/out/verdicts"))
+      .withColumn("batch_id", lit(0L))
+    assert(marker.exceptAll(ref).isEmpty && ref.exceptAll(marker).isEmpty,
+      "marker rows differ from metrics over the written verdicts")
+    // each marker file has the schema of `metrics` plus a batch_id
+    import spark.implicits._
+    val (lm, km) = models()
+    val written = QualityFilter.metrics(QualityFilter.verdicts(spark,
+      spark.read.parquet(input).as[FileRecord], lm, km))
+      .withColumn("batch_id", lit(0L)).schema
+    new File(s"$base/out/metrics").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => assert(footerSchema(f) == written, f.getName))
   }
 }

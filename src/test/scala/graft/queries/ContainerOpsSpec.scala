@@ -152,6 +152,27 @@ class ContainerOpsSpec extends SparkSpec {
     assert(mhShuffle == exact)
   }
 
+  test("containerMinhashPairs runs at its default threshold") {
+    // default 0.05 bands as (1, 64): a pair at jaccard 0.3 is missed with
+    // probability 0.7^64 < 1e-9, and every emitted pair is verified exactly
+    val rnd = new scala.util.Random(91)
+    val vocab = Vector("a", "b", "c", "d")
+    val d = docs((1L to 60L).map { id =>
+      (id, Seq.fill(3 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size)))
+        .mkString(" "), s"s${rnd.nextInt(6)}")
+    }: _*)
+    def rows(df: DataFrame) = df
+      .select("src_a", "src_b", "n_inter", "n_union", "jaccard")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        r.getLong(3), r.getDouble(4))).toSet
+    val exact = rows(ContainerOps.containerSimilarity(d))
+      .filter(_._5 >= 0.05)
+    val mh = rows(ContainerOps.containerMinhashPairs(d))
+    assert(exact.exists(_._5 >= 0.3), "seeded corpus must hold close pairs")
+    assert(mh.subsetOf(exact), s"minhash=$mh exact=$exact")
+    assert(exact.filter(_._5 >= 0.3).subsetOf(mh), s"minhash=$mh exact=$exact")
+  }
+
   test("containerClusters: keep-the-largest canonical, chains, singletons") {
     // universe: A(3 docs), B(2), C(4), D(1); chain A~B~C (C largest
     // must win despite B being the bridge), D singleton

@@ -50,6 +50,18 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("banding compares its budget in Long: low thresholds stay in budget") {
+    // at 0.05 every r's band count saturates at Int.MaxValue; an Int
+    // 8 * b wrapped to -8 and passed the budget
+    assert(TrainingOps.minhashBanding(0.05, 1e-9) === ((1, 64)))
+    val pinned = Seq(0.5 -> ((1, 30)), 0.55 -> ((1, 26)), 0.6 -> ((1, 23)),
+      0.65 -> ((1, 20)), 0.7 -> ((2, 31)), 0.75 -> ((2, 26)),
+      0.8 -> ((2, 21)), 0.85 -> ((2, 17)), 0.9 -> ((3, 16)),
+      0.95 -> ((4, 13)))
+    for ((t, rb) <- pinned)
+      assert(TrainingOps.minhashBanding(t, 1e-9) === rb, s"t=$t")
+  }
+
   test("simhash pairs equal a brute-force recompute (banding is complete)") {
     val sh = TrainingOps.q17Simhash(spark, dir).collect()
     // exact contract: {pairs : hamming(simhash_i, simhash_j) <= 3}

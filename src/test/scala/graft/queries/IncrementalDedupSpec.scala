@@ -131,37 +131,23 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("one deltaStep on a seeded catalog runs 14 Spark jobs, on every run") {
     import spark.implicits._
-    val sc = spark.sparkContext
     // the catalog's schema and the batch's row count come from the commit
     // itself: no parquet footer inference (four jobs) and no count over
     // the written dir (two jobs), which made this step 20 jobs
     def jobsOfOneStep(run: Int): Int = {
       val root = java.nio.file.Files.createTempDirectory("graft_incr_jobs").toString
-      val group = s"incr-dedup-jobs-$run"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(e.properties)
-              .exists(_.getProperty("spark.jobGroup.id") == group))
-            jobs.incrementAndGet()
-      }
       try {
         IncrementalDedup.commitBatch(
           corpusA.toDF("doc_id", "text"), 0L, root, 0.9)
-        sc.addSparkListener(listener)
-        sc.setJobGroup(group, "one deltaStep")
-        val pairs = try IncrementalDedup.deltaStep(spark,
+        val (pairs, jobs, _) = org.apache.spark.JobTrace(spark,
+            s"incr-dedup-jobs-$run") {
+          IncrementalDedup.deltaStep(spark,
             corpusB.toDF("doc_id", "text"), 1L, root, 0.9).collect()
-          finally sc.clearJobGroup()
+        }
         assert(pairSet(pairs).map(p => (p._1, p._2)) ===
           Set((2000L, 3000L), (5L, 3001L)))
-        org.apache.spark.ListenerDrain(sc)
-        jobs.get
-      } finally {
-        sc.removeSparkListener(listener)
-        deleteTree(root)
-      }
+        jobs
+      } finally deleteTree(root)
     }
     assert(Seq(1, 2).map(jobsOfOneStep) === Seq(14, 14))
   }
